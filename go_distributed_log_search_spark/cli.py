@@ -68,7 +68,7 @@ def cmd_index(spark: SparkSession, wh: Warehouse, args) -> int:
     good = df.filter(~df["_corrupt"]).drop("_corrupt")
     n = wh.append_batch(good, args.name, batch_id)
     n_corrupt = df.filter(df["_corrupt"]).count()
-    wh.record_lineage(batch_id, args.name, n)
+    wh.record_lineage_many(batch_id, {args.name: n})
     print(f"indexed {n} docs into '{args.name}' (batch {batch_id[:8]}, "
           f"{n_corrupt} corrupt quarantined)")
     return 0

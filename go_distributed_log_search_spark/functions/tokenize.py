@@ -38,17 +38,15 @@ DEFAULT_TOKEN_PATTERN = "[a-z0-9]+"
 DEFAULT_SPLIT_PATTERN = "[^a-z0-9]+"
 
 
-def tokenize_default(col: Column, keep_empty: bool = False) -> Column:
-    del keep_empty  # extraction never produces empties
+def tokenize_default(col: Column) -> Column:
     return F.regexp_extract_all(F.lower(col), F.lit(DEFAULT_TOKEN_PATTERN), F.lit(0))
 
 
-def tokenize_whitespace(col: Column, keep_empty: bool = False) -> Column:
-    del keep_empty
+def tokenize_whitespace(col: Column) -> Column:
     return F.regexp_extract_all(col, F.lit(r"\S+"), F.lit(0))
 
 
-def tokenize_raw(col: Column, keep_empty: bool = False) -> Column:
+def tokenize_raw(col: Column) -> Column:
     return F.array(F.trim(col))
 
 
@@ -65,11 +63,11 @@ def _stem_tokens_udf():
     return F.pandas_udf(_stem_tokens_impl, "array<string>")
 
 
-def tokenize_en_stem(col: Column, keep_empty: bool = False) -> Column:
+def tokenize_en_stem(col: Column) -> Column:
     """default tokenization + the Porter2 (snowball english) stemmer —
     the same algorithm Bluge applies for ``en_stem`` (closes the
     round-2/3 classic-Porter delta; see functions/stemmer.py)."""
-    return _stem_tokens_udf()(tokenize_default(col, keep_empty))
+    return _stem_tokens_udf()(tokenize_default(col))
 
 
 TOKENIZERS = {
@@ -80,5 +78,5 @@ TOKENIZERS = {
 }
 
 
-def tokenize(col: Column, mode: str = "default", keep_empty: bool = False) -> Column:
-    return TOKENIZERS[mode](col, keep_empty)
+def tokenize(col: Column, mode: str = "default") -> Column:
+    return TOKENIZERS[mode](col)

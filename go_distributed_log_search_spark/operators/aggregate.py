@@ -94,8 +94,8 @@ def _terms(
 ) -> DataFrame:
     """Exploded (group..., term) rows.
 
-    Hot-path discipline: the empty-token filter runs AFTER the explode as a
-    plain scalar predicate. Filtering inside the array with the
+    Hot-path discipline: the empty-token filter (``raw`` yields one empty
+    term for blank text) runs AFTER the explode as a plain scalar predicate. Filtering inside the array with the
     ``filter(arr, lambda)`` higher-order function would knock the whole
     Generate out of whole-stage codegen into interpreted eval
     (ArrayFilter.eval per row) — measured 30-50x slower on this stage.
@@ -103,7 +103,7 @@ def _terms(
     return df.select(
         *group_cols,
         *(extra or []),
-        F.explode(tokenize(F.col(text_col), tokenizer, keep_empty=True)).alias("term"),
+        F.explode(tokenize(F.col(text_col), tokenizer)).alias("term"),
     ).filter(F.col("term") != "")
 
 

@@ -11,9 +11,10 @@ Here one pass over the parsed+enriched turns fans out to 3+ sink tables
     sink_assistant_turns role = assistant
 
 A row may satisfy several predicates and lands in EVERY matching sink (like
-a doc indexed under several shards). ``sink_tags`` computes the tag array
-once; the writer persists the tagged frame and appends each sink with a
-cheap filter — single-pass economics (SURVEY.md §4 "fan-out router").
+a doc indexed under several shards). ``with_sink_tags`` computes the tag
+array once; the writer persists the exploded ``routed`` frame and appends
+each sink with a cheap filter — single-pass economics (SURVEY.md §4
+"fan-out router").
 """
 
 from __future__ import annotations
@@ -55,10 +56,11 @@ def with_sink_tags(df: DataFrame) -> DataFrame:
 def routed(df: DataFrame) -> DataFrame:
     """Exploded (sink, row) view — one output row per (row, matching sink).
 
-    This is the logical fan-out; the physical writer (streaming/microbatch)
-    instead persists the tagged frame and runs one filtered append per sink
-    to avoid materializing the explode twice. The null-tag filter runs on
-    the exploded scalar column (codegen) rather than inside the array (HOF).
+    This is the logical fan-out. The physical writer
+    (streaming/microbatch.commit_batch) persists this exploded frame once
+    and runs one filtered append per sink plus the agg_terms aggregate over
+    it. The null-tag filter runs on the exploded scalar column (codegen)
+    rather than inside the array (HOF).
 
     Shape alternatives measured (3.2M turns, local[8], sink-count job,
     round 3): this explode+filter 4.63s; array_compact before the explode

@@ -29,7 +29,7 @@ def parsed_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enrich.enrich_turns(parse.parse_turns(df), spark)
 
 
-def run_pipeline(spark: SparkSession, sf_dir: str, nsalt: int = aggregate.DEFAULT_NSALT) -> dict[str, DataFrame]:
+def run_pipeline(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Full flow; returns the principal DataFrames (lazy)."""
     base = transcripts_df(spark, sf_dir)
     enriched = parsed_enriched(spark, sf_dir)
@@ -42,6 +42,6 @@ def run_pipeline(spark: SparkSession, sf_dir: str, nsalt: int = aggregate.DEFAUL
         "enriched": enriched,
         "routed": tagged,
         "route_counts": route.route_counts(enriched),
-        "agg_terms": aggregate.term_counts(tagged, nsalt=nsalt, hot_keys=hot),
+        "agg_terms": aggregate.term_counts(tagged, hot_keys=hot),
         "ordering": aggregate.ordering_check(base),
     }

@@ -4,10 +4,13 @@ The sandbox is one JVM with 32 threads (local[32], 128 GiB); production is a
 multi-executor cluster reading 100 TB+. Every knob below is chosen so the
 same plan shape survives the scale-up:
 
-- AQE on: runtime shuffle-partition coalescing + skew-join splitting. At
-  10^12 turns the conv_id distribution is Zipf-skewed (BASELINE.json
-  north_rule) and AQE handles the join side of that; the aggregation side is
-  handled explicitly by salting (operators/aggregate.py).
+- AQE off: every hot-path exchange carries an explicit partition count, so
+  locally AQE only adds re-planning pauses. A production session reading
+  unknown-sized inputs turns it on with
+  ``get_spark(extra_conf={"spark.sql.adaptive.enabled": "true"})`` for
+  runtime coalescing + skew-join splitting (the coalesce/skew-join confs
+  below are preset for that). The aggregation side of the Zipf skew is
+  handled by salting either way (operators/aggregate.py).
 - shuffle.partitions defaults to the core count locally; on a real cluster
   this is overridden to ~2-3x total cores (AQE coalesces down).
 - Arrow enabled: every pandas UDF crosses the JVM<->Python boundary in
@@ -125,24 +128,19 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # AQE default OFF locally, ON in production (SPARK_GRAFT_AQE=1;
-        # round-6 change): every hot-path exchange here carries an explicit
-        # partition count (repartition(n, key) / pinned shuffle_partitions),
-        # so at local scale AQE contributes no decisions — only a
-        # per-exchange materialization barrier plus a driver re-planning
-        # pause between stages (measured on the sf0.1 headline queries:
+        # AQE OFF by default: every hot-path exchange here carries an
+        # explicit partition count (repartition(n, key) / pinned
+        # shuffle_partitions), so at local scale AQE contributes no
+        # decisions — only a per-exchange materialization barrier plus a
+        # driver re-planning pause between stages (measured on the sf0.1 headline queries:
         # 8 jobs -> 3 jobs on route_counts, full pipeline 0.41 -> 0.38s,
         # agg_terms 0.36 -> 0.28s, min-of-5). A real cluster reading
-        # unknown-sized 100 TB inputs should run with SPARK_GRAFT_AQE=1 so
-        # runtime coalescing + skew-join splitting engage; the salting in
+        # unknown-sized 100 TB inputs should pass
+        # extra_conf={"spark.sql.adaptive.enabled": "true"} so runtime
+        # coalescing + skew-join splitting engage; the salting in
         # operators/aggregate.py covers the aggregation-skew side either
         # way (AQE skew handling only applies to joins).
-        .config(
-            "spark.sql.adaptive.enabled",
-            "true"
-            if os.environ.get("SPARK_GRAFT_AQE", "0") in ("1", "true")
-            else "false",
-        )
+        .config("spark.sql.adaptive.enabled", "false")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -166,8 +164,8 @@ def get_spark(
         # scaling-job run at 32 threads. Off-heap they are malloc'd/freed
         # outside the GC entirely (scaling job: 16.3s -> 13.5s at
         # local[32]). Production executors use the same split.
-        .config("spark.memory.offHeap.enabled", os.environ.get("SPARK_GRAFT_OFFHEAP", "true"))
-        .config("spark.memory.offHeap.size", os.environ.get("SPARK_GRAFT_OFFHEAP_SIZE", "6g"))
+        .config("spark.memory.offHeap.enabled", "true")
+        .config("spark.memory.offHeap.size", "6g")
         # local small-SF tuning: split packing at the default 128MB/4MB
         # open-cost folds a 64-file table into a handful of splits, capping
         # map-stage parallelism far below the core count (the map stages

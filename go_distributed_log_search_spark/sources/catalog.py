@@ -175,11 +175,6 @@ class Warehouse:
         df = self.spark.createDataFrame(rows, schema)
         df.coalesce(1).write.mode("append").parquet(self.path(table))
 
-    def record_lineage(self, batch_id: str, sink: str, row_count: int) -> None:
-        self._append_rows(
-            "lineage", [(batch_id, sink, row_count, time.time())], LINEAGE_SCHEMA
-        )
-
     def record_lineage_many(self, batch_id: str, counts: dict[str, int]) -> None:
         """One append for a whole batch's lineage (one tiny Spark job
         instead of one per sink — the write is still AFTER all data

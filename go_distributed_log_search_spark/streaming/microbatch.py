@@ -27,8 +27,6 @@ with trigger(processingTime="30 seconds") — see streaming/structured.py.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,6 +47,41 @@ def pending_partitions(
     cp = wh.load_checkpoints(source_id)
     done = {r.part_id for r in cp.collect()}
     return [p for p in all_parts if p not in done]
+
+
+def commit_batch(
+    spark: SparkSession, wh: Warehouse, batch_df: DataFrame, batch_id: str
+) -> dict[str, int]:
+    """Commit one batch of raw transcripts: the one write path of every
+    transcript ingest driver (this loop, structured.py's foreachBatch, the
+    spark-submit job).
+
+    Parses and enriches the batch, persists the routed frame once, appends
+    each ``sink_<name>`` table plus ``agg_terms`` under ``batch_id``, then
+    records one lineage row per table with the row counts read back from
+    the commits. Returns those counts, keyed by sink name (``errors``, ...)
+    and ``agg_terms`` as the lineage rows are.
+    """
+    enriched = enrich.enrich_turns(parse.parse_turns(batch_df), spark)
+    # persisted: each append is a separate job over full rows, and
+    # re-deriving the routed frame per table would re-parse the batch
+    routed = route.routed(enriched).persist()
+    try:
+        # 1. data commits (S5)
+        counts: dict[str, int] = {}
+        for sink in route.SINKS:
+            sink_df = routed.filter(F.col("sink") == sink).drop("sink")
+            counts[sink] = wh.append_batch(sink_df, f"sink_{sink}", batch_id)
+        # hot_keys=None: a batch is a bounded slice — partial agg absorbs
+        # its skew; per-batch sample-based detection would add two jobs per
+        # batch for nothing
+        aggs = aggregate.term_counts(routed, hot_keys=None)
+        counts["agg_terms"] = wh.append_batch(aggs, "agg_terms", batch_id)
+        # 2. lineage AFTER all data commits (A2, mod.go:362-365), one append
+        wh.record_lineage_many(batch_id, counts)
+    finally:
+        routed.unpersist()
+    return counts
 
 
 def run_microbatch_ingest(
@@ -81,26 +114,7 @@ def run_microbatch_ingest(
         batch_id = f"{source_id}-p{min(batch_parts)}-{max(batch_parts)}"
         batch = tagged_input.filter(F.col("part_id").isin([int(p) for p in batch_parts]))
 
-        enriched = enrich.enrich_turns(parse.parse_turns(batch), spark)
-        routed = route.routed(enriched).persist()
-        try:
-            # 1. sink appends (S5 commit)
-            counts: dict[str, int] = {}
-            for sink in route.SINKS:
-                sink_df = routed.filter(F.col("sink") == sink).drop("sink")
-                counts[sink] = wh.append_batch(sink_df, f"sink_{sink}", batch_id)
-            # aggregate table rides the same batch cycle. hot_keys=None: a
-            # micro-batch is a bounded slice — partial agg absorbs its skew;
-            # per-batch sample-based detection would add two jobs per batch
-            # for nothing (callers with known hot keys pass them through).
-            aggs = aggregate.term_counts(routed, hot_keys=None)
-            wh.append_batch(aggs, "agg_terms", batch_id)
-            counts["agg_terms"] = -1
-            # 2. lineage rows AFTER all data commits (A2, mod.go:362-365);
-            # one append for the whole batch
-            wh.record_lineage_many(batch_id, counts)
-        finally:
-            routed.unpersist()
+        commit_batch(spark, wh, batch, batch_id)
         # 3. checkpoint LAST (ST3 ordering, index.go:258-274)
         seen = {
             r.part_id: r.w
@@ -114,8 +128,3 @@ def run_microbatch_ingest(
         committed.append(batch_id)
         batch_no += 1
     return committed
-
-
-def uuid_batch_id() -> str:
-    """Reference-parity batch id (index.go:87) for non-resumable one-shots."""
-    return str(uuid.uuid4())

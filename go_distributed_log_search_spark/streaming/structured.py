@@ -24,10 +24,9 @@ with exactly-once sink effects when the batch write is idempotent
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators import enrich, parse, route
 from ..sources.catalog import Warehouse
+from .microbatch import commit_batch
 
 
 def stream_ingest_available_now(
@@ -35,7 +34,6 @@ def stream_ingest_available_now(
     input_path: str,
     wh: Warehouse,
     checkpoint_dir: str,
-    commit_interval: str | None = None,
 ) -> int:
     """Run the streaming pipeline over all currently-available input files
     (trigger availableNow — the testable stand-in for a 30s processing-time
@@ -53,13 +51,7 @@ def stream_ingest_available_now(
     n_batches = {"n": 0}
 
     def process_batch(batch_df: DataFrame, batch_no: int) -> None:
-        enriched = enrich.enrich_turns(parse.parse_turns(batch_df), batch_df.sparkSession)
-        routed = route.routed(enriched)
-        batch_id = f"stream-{batch_no}"
-        for sink in route.SINKS:
-            sink_df = routed.filter(F.col("sink") == sink).drop("sink")
-            n = wh.append_batch(sink_df, f"sink_{sink}", batch_id)
-            wh.record_lineage(batch_id, sink, n)
+        commit_batch(batch_df.sparkSession, wh, batch_df, f"stream-{batch_no}")
         n_batches["n"] += 1
 
     q = (

@@ -24,6 +24,9 @@ Properties engineered into the view (mirroring FIXTURES.md §1):
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 
 # Shared SQL template. {events}/{documents} are table references:
@@ -170,7 +173,20 @@ def transcripts_view_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(transcripts_sql_spark(sf_dir))
 
 
-def transcripts_df(spark: SparkSession, sf_dir: str, materialize: bool = True) -> DataFrame:
+def cache_root() -> str:
+    """Where materialized transcript tables live: ``SPARK_GRAFT_CACHE``,
+    else the repo-local ``.cache``."""
+    default_root = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
+    if not os.path.isdir(os.path.dirname(default_root)):
+        # zipimport (spark-submit --py-files engine.zip): __file__ points
+        # inside the zip, which Hadoop's local FS rejects as a parent dir.
+        # Fall back to a host-local scratch root — same role as an
+        # executor's local working dir on a real cluster.
+        default_root = os.path.join(tempfile.gettempdir(), "spark-graft-cache")
+    return os.environ.get("SPARK_GRAFT_CACHE", default_root)
+
+
+def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The transcripts input table.
 
     In production this IS a materialized Iceberg table; the synthesis view
@@ -185,21 +201,7 @@ def transcripts_df(spark: SparkSession, sf_dir: str, materialize: bool = True) -
     cross-checked against DuckDB running the same SQL in
     tests/test_transcripts_view.py.
     """
-    if not materialize:
-        return transcripts_view_df(spark, sf_dir)
-    import os
-
     sf_name = os.path.basename(os.path.normpath(sf_dir))
-    default_root = os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
-    if not os.path.isdir(os.path.dirname(default_root)):
-        # zipimport (spark-submit --py-files engine.zip): __file__ points
-        # inside the zip, which Hadoop's local FS rejects as a parent dir.
-        # Fall back to a host-local scratch root — same role as an
-        # executor's local working dir on a real cluster.
-        import tempfile
-
-        default_root = os.path.join(tempfile.gettempdir(), "spark-graft-cache")
-    cache_root = os.environ.get("SPARK_GRAFT_CACHE", default_root)
     # ROUND-ROBIN layout — deliberately NOT partitioned by conv_id. The
     # conv distribution is Zipf-skewed (two hot convs own ~40% of turns);
     # key-partitioned files would concentrate a hot conv into one file and
@@ -220,12 +222,8 @@ def transcripts_df(spark: SparkSession, sf_dir: str, materialize: bool = True) -
     # the current session's parallelism) so every session shares ONE cache
     # per sf_dir; the layout is embedded in the cache path so a layout
     # change can never silently reuse a stale cache directory.
-    n_files = int(
-        os.environ.get(
-            "SPARK_GRAFT_CACHE_FILES", os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
-    )
-    path = os.path.join(cache_root, f"transcripts_{sf_name}_f{n_files}.parquet")
+    n_files = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    path = os.path.join(cache_root(), f"transcripts_{sf_name}_f{n_files}.parquet")
     marker = os.path.join(path, "_SUCCESS")
     if not os.path.exists(marker):
         (
@@ -251,15 +249,10 @@ def transcripts_scaled_df(
     """
     if mult <= 1:
         return transcripts_df(spark, sf_dir)
-    import os
-
     from pyspark.sql import functions as F
 
     sf_name = os.path.basename(os.path.normpath(sf_dir))
-    cache_root = os.environ.get(
-        "SPARK_GRAFT_CACHE", os.path.join(os.path.dirname(os.path.dirname(__file__)), ".cache")
-    )
-    path = os.path.join(cache_root, f"transcripts_{sf_name}_x{mult}.parquet")
+    path = os.path.join(cache_root(), f"transcripts_{sf_name}_x{mult}.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         base = transcripts_df(spark, sf_dir)
         rep = base.withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(mult - 1))))

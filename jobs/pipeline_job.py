@@ -37,16 +37,14 @@ def main(argv: list[str] | None = None) -> int:
                     help="counts: per-sink route counts; terms: also run "
                          "the salted posting-count aggregation")
     ap.add_argument("--out", default=None,
-                    help="optional dir: write one parquet table per sink "
-                         "(the fan-out writer path)")
+                    help="optional warehouse dir: commit the input as one "
+                         "batch (sink_* tables, agg_terms, lineage)")
     ap.add_argument("--cpus", type=int, default=None,
                     help="parallelism level; defaults to SPARK_GRAFT_CPUS")
     args = ap.parse_args(argv)
 
     # Imports resolved from the --py-files zip (or an installed package) —
     # NOT from a repo checkout on sys.path.
-    from pyspark.sql import functions as F
-
     from go_distributed_log_search_spark import pipeline
     from go_distributed_log_search_spark.operators import aggregate, route
     from go_distributed_log_search_spark.session import get_spark
@@ -54,10 +52,10 @@ def main(argv: list[str] | None = None) -> int:
 
     t0 = time.time()
     spark = get_spark("pipeline-job", cpus=args.cpus)
+    base = transcripts_df(spark, args.sf_dir)
     enriched = pipeline.parsed_enriched(spark, args.sf_dir)
-    tagged = route.routed(enriched)
 
-    n_turns = transcripts_df(spark, args.sf_dir).count()
+    n_turns = base.count()
     counts = {
         r["sink"]: (r["n_rows"], r["n_convs"])
         for r in route.route_counts(enriched).collect()
@@ -65,34 +63,17 @@ def main(argv: list[str] | None = None) -> int:
 
     n_term_rows = None
     if args.job == "terms":
-        base = transcripts_df(spark, args.sf_dir)
         hot = aggregate.detect_hot_keys(base, "conv_id")
-        n_term_rows = aggregate.term_counts(tagged, hot_keys=hot).count()
+        n_term_rows = aggregate.term_counts(route.routed(enriched), hot_keys=hot).count()
 
     if args.out:
-        # One filtered append per sink over a persisted tagged frame — the
-        # writer shape documented in route.routed's docstring (appends need
-        # full rows; persist shares the parse across the three passes).
-        # Sinks commit through the Warehouse (Iceberg-style batch
-        # partition + lineage row-count record, sources/catalog.py) — the
-        # submitted job IS the reference's `index` command end to end:
-        # parse -> enrich -> route -> per-sink commit with lineage.
+        # the submitted job IS the reference's `index` command end to end:
+        # the whole input commits as one batch through the same path as the
+        # streaming drivers (sink tables, agg_terms, lineage)
         from go_distributed_log_search_spark.sources.catalog import Warehouse
+        from go_distributed_log_search_spark.streaming.microbatch import commit_batch
 
-        wh = Warehouse(spark, args.out)
-        tag_cached = route.with_sink_tags(enriched).persist()
-        try:
-            written = {
-                sink: wh.append_batch(
-                    tag_cached.filter(F.array_contains("sinks", sink)).drop("sinks"),
-                    sink,
-                    batch_id="submit-0",
-                )
-                for sink in route.SINKS
-            }
-            wh.record_lineage_many("submit-0", written)
-        finally:
-            tag_cached.unpersist()
+        commit_batch(spark, Warehouse(spark, args.out), base, "submit-0")
 
     out = {
         "n_turns": n_turns,

@@ -41,6 +41,16 @@ def test_cold_run_commits_everything(spark, transcripts, tmp_path):
         .groupBy("sink").agg(F.sum("row_count").alias("n")).collect()
     )
     assert {r.sink: r.n for r in lineage} == direct
+    # agg_terms lineage is the real row count of each batch's partition
+    agg_rows = {
+        r.batch_id: r["count"]
+        for r in wh.read("agg_terms").groupBy("batch_id").count().collect()
+    }
+    agg_lineage = {
+        r.batch_id: r.row_count
+        for r in wh.lineage().filter(F.col("sink") == "agg_terms").collect()
+    }
+    assert agg_lineage == agg_rows and set(agg_rows) == set(batches)
     # nothing pending after a full run (ST6)
     assert microbatch.pending_partitions(wh, list(range(8))) == []
 

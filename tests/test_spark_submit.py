@@ -101,14 +101,19 @@ def test_submit_two_levels_match_oracle(tmp_path, duck):
     # fan-out writer: each per-sink table the submitted job committed
     # through the Warehouse (batch_id partition) holds exactly the counted
     # rows (routed-row count parity on disk), and the lineage side table
-    # records the same per-sink row counts (north rule: per-partition
-    # lineage + row-count metrics).
+    # records the same per-sink row counts plus the agg_terms rows on disk
+    # (north rule: per-partition lineage + row-count metrics).
     for sink, n_rows in rec_n["sink_counts"].items():
         (written,) = duck.sql(
             "SELECT COUNT(*) FROM read_parquet("
-            f"'{sink_dir}/{sink}/batch_id=submit-0/*.parquet')"
+            f"'{sink_dir}/sink_{sink}/batch_id=submit-0/*.parquet')"
         ).fetchone()
         assert written == n_rows, f"{sink}: wrote {written}, counted {n_rows}"
+    (n_agg,) = duck.sql(
+        "SELECT COUNT(*) FROM read_parquet("
+        f"'{sink_dir}/agg_terms/batch_id=submit-0/*.parquet')"
+    ).fetchone()
+    assert n_agg > 0
     lineage = {
         sink: n
         for sink, n in duck.sql(
@@ -116,4 +121,4 @@ def test_submit_two_levels_match_oracle(tmp_path, duck):
             f"'{sink_dir}/lineage/*.parquet')"
         ).fetchall()
     }
-    assert lineage == rec_n["sink_counts"]
+    assert lineage == {**rec_n["sink_counts"], "agg_terms": n_agg}
