@@ -87,13 +87,20 @@ def tool_marker_expr(text: Column) -> Column:
     return F.rtrim(prefix_extract(text, r"<tool:[a-z]+ ", 6))
 
 
+def _kv_prefix(key: str) -> int:
+    # len("key: ") is the match offset only when the key matches itself
+    if not re.fullmatch(r"\w+", key):
+        raise ValueError(f"kv key must be a plain word, got {key!r}")
+    return len(key) + 2
+
+
 def kv_long_expr(text: Column, key: str) -> Column:
     """Extract ``key: 123`` integer pairs from INFO bodies."""
-    return prefix_extract(text, rf"{key}: \d+", len(key) + 2).try_cast("long")
+    return prefix_extract(text, rf"{key}: \d+", _kv_prefix(key)).try_cast("long")
 
 
 def kv_str_expr(text: Column, key: str) -> Column:
-    return prefix_extract(text, rf"{key}: [\w/.:]+", len(key) + 2)
+    return prefix_extract(text, rf"{key}: [\w/.:]+", _kv_prefix(key))
 
 
 # ---- engine 2: vectorized pandas UDF grok (the Arrow slow path) -------

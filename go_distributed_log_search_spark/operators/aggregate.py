@@ -203,11 +203,6 @@ def term_counts(
     return merged
 
 
-def doc_counts(df: DataFrame, batch_col: str, *extra_cols: str) -> DataFrame:
-    """A2: docs-per-commit counts (mod.go:314-347 footer doc_count)."""
-    return df.groupBy(batch_col, *extra_cols).agg(F.count(F.lit(1)).alias("doc_count"))
-
-
 def ordering_check(df: DataFrame) -> DataFrame:
     """North-rule 'stable turn ordering' invariant as a DataFrame:
     per conversation, rows where row_number-by-turn_idx disagrees with

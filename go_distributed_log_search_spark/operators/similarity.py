@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 from pyspark.sql.functions import pandas_udf
@@ -162,11 +162,6 @@ def _hyperplanes(dim: int, n_planes: int):
             z = ((z ^ (z >> 30)) * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
             out[p, j] = 1.0 if (z >> 63) else -1.0
     return out
-
-
-def _hyperplane(dim: int, plane: int) -> list[float]:
-    """Row `plane` of the hyperplane matrix (kept for tests/back-compat)."""
-    return list(_hyperplanes(dim, plane + 1)[plane])
 
 
 def lsh_signature_udf(spark, dim: int, n_planes: int = 16):
@@ -459,25 +454,6 @@ def cosine_neardup_pairs(
     return rep.groupBy("_ka", "_kb").applyInPandas(
         _score, schema=f"a {id_type}, b {id_type}, cos_sim double"
     )
-
-
-# retained Catalyst-expression kernels (used by tests as a second engine
-# to pin the numpy path's results; NOT on any hot path)
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _quantize_rows(mat):

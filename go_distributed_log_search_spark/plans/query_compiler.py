@@ -63,10 +63,6 @@ def _unquote(v: str) -> str:
     return v[1:-1] if len(v) >= 2 and v[0] == '"' and v[-1] == '"' else v
 
 
-def _lit(v: str):
-    return _unquote(v)
-
-
 class QueryCompiler:
     """Compile a query string against a known set of columns.
 

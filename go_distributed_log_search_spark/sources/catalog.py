@@ -8,55 +8,63 @@ DBAdapter, src/database/adapter.go:12-17) plus the object-storage Operator
 Production design is Iceberg: each sink is an Iceberg table, lineage rows
 ride the snapshot metadata, and commits are atomic snapshot swaps. This
 sandbox has no Iceberg runtime jar, so the stand-in is a parquet warehouse
-with the SAME interface and the same commit discipline:
+for the data plus a driver-side SQLite catalog for the control plane, with
+the SAME interface and the same commit discipline:
 
 - every batch writes under ``{table}/batch_id={id}/`` via dynamic partition
   overwrite -> re-running a failed batch REPLACES its own partition
   (idempotent at-least-once, the reference's file-then-checkpoint ordering,
   index.go:258-274, made crash-safe);
-- ``lineage`` rows (batch_id, sink, row_count) are appended AFTER the data
+- ``lineage`` rows (batch_id, sink, row_count) are written AFTER the data
   commit (A2/doc_count analog, mod.go:362-365);
-- ``checkpoints`` rows (source_id, part_id, watermark) are upserted LAST
-  (kafka_checkpoint.go:124-127 upsert; +1-resume semantics
-  kafka_source.go:252-256).
+- ``checkpoints`` rows (source_id, part_id, watermark) are upserted LAST,
+  keeping the highest watermark (kafka_checkpoint.go:124-127 upsert;
+  +1-resume semantics kafka_source.go:252-256).
+
+Lineage and checkpoints live in ``{root}/_catalog.sqlite``, the analog of
+the reference's SQL store: each write is one transaction on the driver, not
+a Spark job, and the keys (batch_id, sink) and (source_id, part_id) make a
+re-run replace its own rows, as the data partitions are replaced.
 """
 
 from __future__ import annotations
 
-import json
+import contextlib
 import os
+import shutil
+import sqlite3
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("batch_id", T.StringType(), False),
-        T.StructField("sink", T.StringType(), False),
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("committed_at", T.DoubleType(), False),
-    ]
-)
-
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("source_id", T.StringType(), False),
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("watermark", T.LongType(), False),
-        T.StructField("batch_id", T.StringType(), False),
-    ]
-)
+CATALOG_DDL = """
+CREATE TABLE IF NOT EXISTS lineage (batch_id TEXT NOT NULL, sink TEXT NOT NULL,
+  row_count INTEGER NOT NULL, committed_at REAL NOT NULL, PRIMARY KEY (batch_id, sink));
+CREATE TABLE IF NOT EXISTS checkpoints (source_id TEXT NOT NULL, part_id INTEGER NOT NULL,
+  watermark INTEGER NOT NULL, batch_id TEXT NOT NULL, PRIMARY KEY (source_id, part_id));
+"""
 
 
 class Warehouse:
-    """Parquet-backed warehouse with Iceberg-style batch-partition commits."""
+    """Parquet data tables with Iceberg-style batch-partition commits, and
+    a SQLite catalog of lineage and checkpoints beside them."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
+        self.catalog_path = os.path.join(root, "_catalog.sqlite")
+        with contextlib.closing(sqlite3.connect(self.catalog_path)) as con:
+            con.executescript(CATALOG_DDL)
+
+    def _sql(self, sql: str, params=(), many: bool = False) -> list[tuple]:
+        """One statement as one catalog transaction (commit on success,
+        rollback on error) on a connection of its own: foreachBatch commits
+        from a Py4J callback thread, and a sqlite3 connection must stay on
+        the thread that opened it. ``many`` runs it once per params row."""
+        with contextlib.closing(sqlite3.connect(self.catalog_path)) as con, con:
+            return (con.executemany if many else con.execute)(sql, params).fetchall()
 
     # ---------------------------------------------------------- tables
 
@@ -82,34 +90,29 @@ class Warehouse:
 
     def append_batch(self, df: DataFrame, table: str, batch_id: str) -> int:
         """Commit one batch into its own partition (idempotent re-run:
-        dynamic overwrite replaces exactly this batch's data)."""
-        out = df.withColumn("batch_id", F.lit(batch_id))
+        dynamic overwrite replaces exactly this batch's data). Returns the
+        rows written, counted by the write job itself."""
+        written = Observation()
+        out = df.withColumn("batch_id", F.lit(batch_id)).observe(
+            written, F.count(F.lit(1)).alias("rows")
+        )
         (
             out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(self.path(table))
         )
-        # row count from what we just wrote (cheap: single-partition scan)
-        return (
-            self.spark.read.parquet(self.path(table))
-            .filter(F.col("batch_id") == batch_id)
-            .count()
-        )
+        return written.get["rows"]
 
     def commit_order(self) -> list[str]:
         """Batch ids in commit order (lineage commit wall-time, then id as
         the deterministic tiebreak — record_lineage_many stamps one ts per
-        batch). Driver-side collect is control-plane: one row per commit,
-        not per data row."""
-        lin = (
-            self.lineage()
-            .groupBy("batch_id")
-            .agg(F.max("committed_at").alias("_ts"))
-            .orderBy("_ts", "batch_id")
-            .collect()
+        batch)."""
+        rows = self._sql(
+            "SELECT batch_id FROM lineage GROUP BY batch_id"
+            " ORDER BY max(committed_at), batch_id"
         )
-        return [r.batch_id for r in lin]
+        return [b for (b,) in rows]
 
     def read_as_of(self, table: str, batch_id: str) -> DataFrame:
         """Snapshot (time-travel) read: the table as of commit
@@ -139,10 +142,12 @@ class Warehouse:
 
     def drop(self, table: str) -> None:
         """U2 drop-index analog (drop.go:15-87): remove data files; the
-        'catalog row' here is the directory itself."""
-        import shutil
-
-        shutil.rmtree(self.path(table), ignore_errors=True)
+        'catalog row' here is the directory itself. ``lineage`` and
+        ``checkpoints`` are catalog tables: dropping one empties it."""
+        if table in ("lineage", "checkpoints"):
+            self._sql(f"DELETE FROM {table}")
+        else:
+            shutil.rmtree(self.path(table), ignore_errors=True)
 
     def compact(self, table: str, target_partitions: int = 4) -> None:
         """U1 merge analog (merge.go:24-85): read-repartition-rewrite.
@@ -154,8 +159,6 @@ class Warehouse:
         rewrite) — unlike rmtree-then-rename, which had a window where the
         only copy was gone. True single-metadata-op atomicity is what the
         Iceberg snapshot swap provides in production."""
-        import shutil
-
         src = self.path(table)
         tmp = src + ".compact.tmp"
         old = src + ".compact.old"
@@ -171,43 +174,39 @@ class Warehouse:
 
     # ------------------------------------------------ lineage / checkpoints
 
-    def _append_rows(self, table: str, rows: list, schema: T.StructType) -> None:
-        df = self.spark.createDataFrame(rows, schema)
-        df.coalesce(1).write.mode("append").parquet(self.path(table))
-
     def record_lineage_many(self, batch_id: str, counts: dict[str, int]) -> None:
-        """One append for a whole batch's lineage (one tiny Spark job
-        instead of one per sink — the write is still AFTER all data
-        commits, preserving the ST3 ordering)."""
+        """A whole batch's lineage in one transaction, AFTER all its data
+        commits (the ST3 ordering). A re-run batch replaces its own rows."""
         now = time.time()
-        self._append_rows(
-            "lineage",
-            [(batch_id, sink, n, now) for sink, n in counts.items()],
-            LINEAGE_SCHEMA,
-        )
+        rows = [(batch_id, sink, int(n), now) for sink, n in counts.items()]
+        self._sql("INSERT OR REPLACE INTO lineage VALUES (?, ?, ?, ?)", rows, many=True)
 
     def lineage(self) -> DataFrame:
-        return self.read("lineage")
+        return self.spark.createDataFrame(
+            self._sql("SELECT * FROM lineage ORDER BY batch_id, sink"),
+            "batch_id string, sink string, row_count long, committed_at double",
+        )
 
     def save_checkpoint(
         self, source_id: str, parts: list[tuple[int, int]], batch_id: str
     ) -> None:
-        """Upsert semantics via append + latest-wins read (kafka_checkpoint
-        go upsert): watermark stored is already 'next to process'
-        (offset+1 parity, kafka_source.go:252-256)."""
-        rows = [(source_id, int(p), int(w), batch_id) for p, w in parts]
-        self._append_rows("checkpoints", rows, CHECKPOINT_SCHEMA)
+        """Upsert that keeps the highest watermark per partition
+        (kafka_checkpoint.go upsert): the watermark stored is already 'next
+        to process' (offset+1 parity, kafka_source.go:252-256)."""
+        self._sql(
+            "INSERT INTO checkpoints VALUES (?, ?, ?, ?)"
+            " ON CONFLICT (source_id, part_id) DO UPDATE SET"
+            " watermark = excluded.watermark, batch_id = excluded.batch_id"
+            " WHERE excluded.watermark >= checkpoints.watermark",
+            [(source_id, int(p), int(w), batch_id) for p, w in parts],
+            many=True,
+        )
 
     def load_checkpoints(self, source_id: str) -> DataFrame:
-        """Latest watermark per partition (ST4 checkpoint load)."""
-        if not self.exists("checkpoints"):
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
-        cp = self.read("checkpoints").filter(F.col("source_id") == source_id)
-        w = F.max("watermark").alias("watermark")
-        return cp.groupBy("source_id", "part_id").agg(w)
-
-    # ------------------------------------------------------------- misc
-
-    def write_manifest(self, name: str, payload: dict) -> None:
-        with open(os.path.join(self.root, f"{name}.json"), "w") as f:
-            json.dump(payload, f, indent=2, sort_keys=True)
+        """Watermark per partition (ST4 checkpoint load)."""
+        rows = self._sql(
+            "SELECT source_id, part_id, watermark FROM checkpoints"
+            " WHERE source_id = ? ORDER BY part_id",
+            (source_id,),
+        )
+        return self.spark.createDataFrame(rows, "source_id string, part_id int, watermark long")

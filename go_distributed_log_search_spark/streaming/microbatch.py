@@ -58,8 +58,8 @@ def commit_batch(
 
     Parses and enriches the batch, persists the routed frame once, appends
     each ``sink_<name>`` table plus ``agg_terms`` under ``batch_id``, then
-    records one lineage row per table with the row counts read back from
-    the commits. Returns those counts, keyed by sink name (``errors``, ...)
+    records one lineage row per table with the row counts each write job
+    observed. Returns those counts, keyed by sink name (``errors``, ...)
     and ``agg_terms`` as the lineage rows are.
     """
     enriched = enrich.enrich_turns(parse.parse_turns(batch_df), spark)
@@ -77,7 +77,8 @@ def commit_batch(
         # batch for nothing
         aggs = aggregate.term_counts(routed, hot_keys=None)
         counts["agg_terms"] = wh.append_batch(aggs, "agg_terms", batch_id)
-        # 2. lineage AFTER all data commits (A2, mod.go:362-365), one append
+        # 2. lineage AFTER all data commits (A2, mod.go:362-365), one
+        # catalog transaction
         wh.record_lineage_many(batch_id, counts)
     finally:
         routed.unpersist()

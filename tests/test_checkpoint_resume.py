@@ -74,14 +74,62 @@ def test_crash_resume_equals_cold_run(spark, transcripts, tmp_path):
 
 def test_rerun_batch_is_idempotent(spark, transcripts, tmp_path):
     """ST5: re-running an already-committed batch_id replaces, not
-    duplicates (dynamic partition overwrite)."""
+    duplicates (dynamic partition overwrite for the data, the (batch, table)
+    key for lineage)."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     microbatch.run_microbatch_ingest(spark, transcripts, wh, n_parts=4, parts_per_batch=4)
     before = _sink_state(wh)
     # wipe checkpoints to force the loop to re-process everything
     wh.drop("checkpoints")
-    microbatch.run_microbatch_ingest(spark, transcripts, wh, n_parts=4, parts_per_batch=4)
+    batches = microbatch.run_microbatch_ingest(
+        spark, transcripts, wh, n_parts=4, parts_per_batch=4
+    )
     assert _sink_state(wh) == before
+    lineage = wh.lineage().collect()
+    tables = [*route.SINKS, "agg_terms"]
+    assert sorted((r.batch_id, r.sink) for r in lineage) == sorted(
+        (b, t) for b in batches for t in tables
+    )
+    summed = {}
+    for r in lineage:
+        summed[r.sink] = summed.get(r.sink, 0) + r.row_count
+    for sink in route.SINKS:
+        assert summed[sink] == wh.read(f"sink_{sink}").count(), sink
+
+
+def test_commit_ordering_and_catalog_reopen(spark, transcripts, tmp_path, monkeypatch):
+    """ST3 per batch: the four data appends, then one lineage write, then
+    one checkpoint save. The catalog lives on disk: a Warehouse reopened on
+    the same root resumes from it and reads the same state."""
+    calls = []
+    for name in ("append_batch", "record_lineage_many", "save_checkpoint"):
+
+        def spy(self, *args, _name=name, _method=getattr(Warehouse, name), **kw):
+            calls.append(_name)
+            return _method(self, *args, **kw)
+
+        monkeypatch.setattr(Warehouse, name, spy)
+    per_batch = ["append_batch"] * 4 + ["record_lineage_many", "save_checkpoint"]
+    root = str(tmp_path / "wh")
+    parts = list(range(8))
+
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        microbatch.run_microbatch_ingest(
+            spark, transcripts, Warehouse(spark, root),
+            n_parts=8, parts_per_batch=4, fail_after_batches=1,
+        )
+    assert calls == per_batch
+    wh = Warehouse(spark, root)
+    assert microbatch.pending_partitions(wh, parts) == [4, 5, 6, 7]
+    microbatch.run_microbatch_ingest(spark, transcripts, wh, n_parts=8, parts_per_batch=4)
+    assert calls == per_batch * 2
+
+    reopened = Warehouse(spark, root)
+    order = ["transcripts-p0-3", "transcripts-p4-7"]
+    assert wh.commit_order() == reopened.commit_order() == order
+    assert sorted(wh.lineage().collect()) == sorted(reopened.lineage().collect())
+    assert len(reopened.lineage().collect()) == 2 * 4
+    assert microbatch.pending_partitions(reopened, parts) == []
 
 
 def test_compact_preserves_data(spark, transcripts, tmp_path):

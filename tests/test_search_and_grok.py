@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from go_distributed_log_search_spark.functions import grok
 from go_distributed_log_search_spark.operators import parse, search
 from go_distributed_log_search_spark.transcripts import transcripts_df
 
@@ -54,6 +55,23 @@ def test_grok_udf_matches_catalyst(spark):
     c_rows = sorted(catalyst.collect(), key=key)
     u_rows = sorted(udf.collect(), key=key)
     assert c_rows == u_rows
+
+
+def test_grok_kv_key_must_be_plain_word(spark):
+    """The ``key: `` prefix offset is len(key) + 2 only when the key
+    matches itself literally, so any other key is refused."""
+    text = F.col("text")
+    for key in ("a.b", "x+", "(k)", "a b", ""):
+        with pytest.raises(ValueError):
+            grok.kv_long_expr(text, key)
+        with pytest.raises(ValueError):
+            grok.kv_str_expr(text, key)
+    row = (
+        spark.createDataFrame([("op: read bytes: 42",)], "text string")
+        .select(grok.kv_str_expr(text, "op"), grok.kv_long_expr(text, "bytes"))
+        .first()
+    )
+    assert tuple(row) == ("read", 42)
 
 
 def test_match_predicate(spark, parsed):

@@ -19,9 +19,11 @@ The throughput side of the N->4N criterion is bench.py's scaling probe
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
+import sqlite3
 import subprocess
 
 import pytest
@@ -114,11 +116,6 @@ def test_submit_two_levels_match_oracle(tmp_path, duck):
         f"'{sink_dir}/agg_terms/batch_id=submit-0/*.parquet')"
     ).fetchone()
     assert n_agg > 0
-    lineage = {
-        sink: n
-        for sink, n in duck.sql(
-            "SELECT sink, row_count FROM read_parquet("
-            f"'{sink_dir}/lineage/*.parquet')"
-        ).fetchall()
-    }
+    with contextlib.closing(sqlite3.connect(f"{sink_dir}/_catalog.sqlite")) as con:
+        lineage = dict(con.execute("SELECT sink, row_count FROM lineage").fetchall())
     assert lineage == {**rec_n["sink_counts"], "agg_terms": n_agg}
