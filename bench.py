@@ -124,7 +124,7 @@ def _pipeline_job(spark, sf_dir: str, mult: int, terms: bool = True):
 
         return base.count(), run_counts
 
-    # Hot keys are detected from the compact base (one tiny sample job).
+    # Hot keys are counted from the compact base (one exact count job).
     hot = aggregate.detect_hot_keys(base, "conv_id")
     # num_partitions pinned so the physical plan is IDENTICAL at every
     # parallelism level (a real N vs 4N cluster comparison holds

@@ -24,11 +24,13 @@ rows overload one reducer (requires huge clusters + extreme skew), and
 (b) non-combinable aggregates (collect_list/set). We therefore salt ONLY
 detected heavy-hitter keys:
 
-    1. driver-side sample job (fraction, fixed seed) estimates key shares;
-       keys above ``hot_share`` of the sample are heavy hitters. This is
-       scale-free — no full count, the sample is a tiny scan, and the hot
-       set is broadcast as a literal IN-list (bounded by ``max_hot``).
-    2. stage 1: groupBy(group, term, salt) where salt = hash(salt_col) % N
+    1. one exact count job: per-key row counts (a small hash aggregate,
+       one row per distinct key) and the input total from an
+       ``Observation`` on the same scan. Keys above ``HOT_SHARE`` of the
+       input are heavy hitters; the hot set (at most ``MAX_HOT_KEYS``) is
+       broadcast as a literal IN-list. A sample would save nothing: it
+       still reads, and on a routed input parses, every row.
+    2. stage 1: groupBy(group, term, salt) where salt = hash(turn_idx) % N
        for hot keys, 0 otherwise -> partial counts. Cold keys aggregate
        fully here; hot keys split across <= N reducers.
     3. stage 2: groupBy(group, term) -> sum. Input is ~result-sized.
@@ -41,51 +43,37 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokenize
 
-DEFAULT_NSALT = 16
+NSALT = 16
 # heavy-hitter threshold: a key owning > 1/(2 * shuffle partitions) of the
 # data can straggle a reducer; below that, partial agg absorbs it.
-DEFAULT_HOT_SHARE = 1.0 / 64
-DEFAULT_SAMPLE_FRACTION = 0.01
+HOT_SHARE = 1.0 / 64
 MAX_HOT_KEYS = 64
 
 
-def detect_hot_keys(
-    df: DataFrame,
-    key_col: str,
-    hot_share: float = DEFAULT_HOT_SHARE,
-    sample_fraction: float = DEFAULT_SAMPLE_FRACTION,
-    max_hot: int = MAX_HOT_KEYS,
-) -> list:
-    """Sample-estimate heavy-hitter keys (driver-side, one tiny job).
+def detect_hot_keys(df: DataFrame, key_col: str) -> list:
+    """Heavy-hitter keys of ``key_col``: the (at most ``MAX_HOT_KEYS``)
+    keys owning more than ``HOT_SHARE`` of the rows, most frequent first.
 
-    Scale-free: works off key shares within the sample, so no full count of
-    the input is needed; seed fixed for determinism.
+    One Spark job, exact: the per-key counts are a hash aggregate over the
+    distinct keys, and the input total is observed on the same scan (a
+    scalar, not a window over an empty partitionBy, which would funnel
+    every distinct key through ONE task). An empty input has no hot keys.
     """
-    def hot_at(fraction: float) -> tuple[list, int]:
-        sample = df.select(key_col).sample(fraction=fraction, seed=42)
-        counts = sample.groupBy(key_col).agg(F.count(F.lit(1)).alias("c"))
-        # top-(max_hot) sampled keys; the sample total comes from a scalar
-        # aggregate over the (already tiny) per-key counts — NOT a window
-        # over an empty partitionBy, which would funnel every distinct
-        # sampled key through ONE task (VERDICT r02: at 10^9 conversations
-        # that single-partition WindowExec is a serial bottleneck gating
-        # the hot-path aggregate).
-        rows = counts.orderBy(F.col("c").desc(), F.col(key_col)).limit(max_hot).collect()
-        total_row = counts.agg(F.sum("c").alias("t")).collect()[0]
-        total = total_row["t"] or 0
-        hot = [r[0] for r in rows if r["c"] > total * hot_share]
-        return hot, total
-
-    hot, total = hot_at(sample_fraction)
-    if total < 1000 and sample_fraction < 1.0:
-        # sample too small to estimate shares (tiny inputs): use everything
-        hot, _ = hot_at(1.0)
-    return hot
+    seen = Observation()
+    keys = df.select(key_col).observe(seen, F.count(F.lit(1)).alias("rows"))
+    top = (
+        keys.groupBy(key_col).agg(F.count(F.lit(1)).alias("c"))
+        .orderBy(F.col("c").desc(), F.col(key_col))
+        .limit(MAX_HOT_KEYS)
+        .collect()
+    )
+    total = seen.get["rows"]
+    return [r[0] for r in top if r["c"] > total * HOT_SHARE]
 
 
 def _terms(
@@ -112,8 +100,6 @@ def term_counts(
     group_cols: tuple[str, ...] = ("sink", "conv_id"),
     text_col: str = "text",
     tokenizer: str = "default",
-    nsalt: int = DEFAULT_NSALT,
-    salt_col: str = "turn_idx",
     skew_col: str = "conv_id",
     hot_keys: str | Iterable | None = "auto",
     num_partitions: int | None = None,
@@ -148,8 +134,8 @@ def term_counts(
     Shape (hot keys — the Zipf head, north rule "salted keys"):
         hot conversations are few, so their (conv, term) domain is small
         and REPEATS heavily — exactly where partial agg + salting shine:
-        stage 1 groupBy(group..., term, salt = hash(salt_col) % nsalt)
-        bounds any reducer's share of a hot conv to 1/nsalt; stage 2
+        stage 1 groupBy(group..., term, salt = hash(turn_idx) % NSALT)
+        bounds any reducer's share of a hot conv to 1/NSALT; stage 2
         re-sums. Without the split, one task would own 20%+ of all turns.
 
     The union of both branches scans the input twice; the scan is the cheap
@@ -160,11 +146,7 @@ def term_counts(
         hot_keys = detect_hot_keys(df, skew_col)
     elif hot_keys == "auto":
         hot_keys = None
-    # nsalt <= 1 means "no salting": clear the hot set so hot rows stay in
-    # the cold branch instead of being filtered out and never re-added
-    # (ADVICE r02: the early cold-only return silently dropped every row
-    # of the hottest keys when a caller passed nsalt=1).
-    hot = list(hot_keys) if hot_keys and nsalt > 1 else []
+    hot = list(hot_keys or [])
 
     if skew_col not in df.columns:
         # low-cardinality grouping (no per-conversation key): plain hash
@@ -187,7 +169,7 @@ def term_counts(
     hot_src = df.filter(F.col(skew_col).isin(*hot))
     hot_terms = _terms(
         hot_src, group_cols, text_col, tokenizer,
-        extra=[F.pmod(F.hash(salt_col), F.lit(nsalt)).alias("_salt")],
+        extra=[F.pmod(F.hash("turn_idx"), F.lit(NSALT)).alias("_salt")],
     )
     stage1 = hot_terms.groupBy(*group_cols, "term", "_salt").agg(
         F.count(F.lit(1)).alias("_partial")

@@ -34,9 +34,9 @@ def run_pipeline(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     base = transcripts_df(spark, sf_dir)
     enriched = parsed_enriched(spark, sf_dir)
     tagged = route.routed(enriched)
-    # heavy-hitter detection samples the raw transcripts (pre-parse plan:
-    # just the conv_id column) rather than the routed frame, so the sample
-    # job doesn't drag the parse regexes along
+    # heavy-hitter detection counts the raw transcripts (pre-parse plan:
+    # just the conv_id column) rather than the routed frame, so its one
+    # count job doesn't drag the parse regexes along
     hot = aggregate.detect_hot_keys(base, "conv_id")
     return {
         "enriched": enriched,

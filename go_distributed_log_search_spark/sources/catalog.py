@@ -202,11 +202,10 @@ class Warehouse:
             many=True,
         )
 
-    def load_checkpoints(self, source_id: str) -> DataFrame:
-        """Watermark per partition (ST4 checkpoint load)."""
-        rows = self._sql(
-            "SELECT source_id, part_id, watermark FROM checkpoints"
-            " WHERE source_id = ? ORDER BY part_id",
+    def load_checkpoints(self, source_id: str) -> dict[int, int]:
+        """``{part_id: watermark}`` of a source, read straight from the
+        catalog (ST4 checkpoint load)."""
+        return dict(self._sql(
+            "SELECT part_id, watermark FROM checkpoints WHERE source_id = ?",
             (source_id,),
-        )
-        return self.spark.createDataFrame(rows, "source_id string, part_id int, watermark long")
+        ))

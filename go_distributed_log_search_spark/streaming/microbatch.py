@@ -27,7 +27,7 @@ with trigger(processingTime="30 seconds") — see streaming/structured.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import aggregate, enrich, parse, route
@@ -44,8 +44,7 @@ def pending_partitions(
     wh: Warehouse, all_parts: list[int], source_id: str = SOURCE_ID
 ) -> list[int]:
     """ST4: anti-join the partition list against stored checkpoints."""
-    cp = wh.load_checkpoints(source_id)
-    done = {r.part_id for r in cp.collect()}
+    done = wh.load_checkpoints(source_id)
     return [p for p in all_parts if p not in done]
 
 
@@ -73,7 +72,7 @@ def commit_batch(
             sink_df = routed.filter(F.col("sink") == sink).drop("sink")
             counts[sink] = wh.append_batch(sink_df, f"sink_{sink}", batch_id)
         # hot_keys=None: a batch is a bounded slice — partial agg absorbs
-        # its skew; per-batch sample-based detection would add two jobs per
+        # its skew; per-batch hot-key detection would add a count job per
         # batch for nothing
         aggs = aggregate.term_counts(routed, hot_keys=None)
         counts["agg_terms"] = wh.append_batch(aggs, "agg_terms", batch_id)
@@ -114,17 +113,22 @@ def run_microbatch_ingest(
         # (index.go:87) because its duplicates are tolerated
         batch_id = f"{source_id}-p{min(batch_parts)}-{max(batch_parts)}"
         batch = tagged_input.filter(F.col("part_id").isin([int(p) for p in batch_parts]))
+        # each partition's watermark (max turn_idx + 1) is observed on the
+        # commit's own scan of the raw batch, not counted by a job of its own
+        seen = Observation()
+        batch = batch.observe(seen, *(
+            F.max(F.when(F.col("part_id") == p, F.col("turn_idx") + 1)).alias(str(p))
+            for p in batch_parts
+        ))
 
         commit_batch(spark, wh, batch, batch_id)
-        # 3. checkpoint LAST (ST3 ordering, index.go:258-274)
-        seen = {
-            r.part_id: r.w
-            for r in batch.groupBy("part_id").agg((F.max("turn_idx") + 1).alias("w")).collect()
-        }
-        # empty partitions checkpoint at watermark 0 — they are processed,
-        # just dataless (ST4: a partition without data still advances)
+        # 3. checkpoint LAST (ST3 ordering, index.go:258-274); empty
+        # partitions (NULL max) checkpoint at watermark 0 — they are
+        # processed, just dataless (ST4: a partition without data still
+        # advances)
+        marks = seen.get
         wh.save_checkpoint(
-            source_id, [(p, seen.get(p, 0)) for p in batch_parts], batch_id
+            source_id, [(p, marks[str(p)] or 0) for p in batch_parts], batch_id
         )
         committed.append(batch_id)
         batch_no += 1

@@ -1,6 +1,6 @@
 """term_counts mode equality — every salting mode must return IDENTICAL
-results (ADVICE r02: nsalt<=1 silently dropped hot-key rows; a skew split
-whose skew_col is not a group key emitted duplicate group rows)."""
+results (ADVICE r02: a skew split whose skew_col is not a group key emitted
+duplicate group rows) — and the hot-key detector's result and job count."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,9 +30,7 @@ def test_modes_identical(spark, skewed):
     for kwargs in (
         {"hot_keys": "auto"},
         {"hot_keys": ["hot"]},
-        {"hot_keys": ["hot"], "nsalt": 1},   # nsalt<=1 == no salting
-        {"hot_keys": ["hot"], "nsalt": 4},
-        {"hot_keys": [], "nsalt": 8},
+        {"hot_keys": []},
     ):
         assert _counts(aggregate.term_counts(skewed, **kwargs)) == base, kwargs
 
@@ -41,7 +39,7 @@ def test_skew_col_not_in_group_cols_no_duplicates(spark, skewed):
     """Cold/hot branches both emit (sink, term) rows for hot convs' terms;
     the final re-aggregate must merge them."""
     out = aggregate.term_counts(
-        skewed, group_cols=("sink",), hot_keys=["hot"], nsalt=4
+        skewed, group_cols=("sink",), hot_keys=["hot"]
     )
     rows = out.collect()
     keys = [(r.sink, r.term) for r in rows]
@@ -55,3 +53,20 @@ def test_skew_col_not_in_group_cols_no_duplicates(spark, skewed):
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     assert {(r.sink, r.term): r.cnt for r in rows} == plain
+
+
+def test_detect_hot_keys_one_exact_job(spark, skewed):
+    """The detector counts every key in ONE Spark job: "hot" owns 60% of
+    the rows, every other conv under the 1/64 hot share. An empty input
+    has no hot keys."""
+    sc = spark.sparkContext
+    sc.setJobGroup("detect_hot_keys", "detect_hot_keys")
+    try:
+        assert aggregate.detect_hot_keys(skewed, "conv_id") == ["hot"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("detect_hot_keys")) == 1
+    empty = spark.createDataFrame([], skewed.schema)
+    assert aggregate.detect_hot_keys(empty, "conv_id") == []

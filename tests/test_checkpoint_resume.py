@@ -2,6 +2,8 @@
 counts match route counts, structured-streaming path commits the same data.
 """
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -130,6 +132,34 @@ def test_commit_ordering_and_catalog_reopen(spark, transcripts, tmp_path, monkey
     assert sorted(wh.lineage().collect()) == sorted(reopened.lineage().collect())
     assert len(reopened.lineage().collect()) == 2 * 4
     assert microbatch.pending_partitions(reopened, parts) == []
+
+
+def test_checkpoint_watermarks(spark, tmp_path):
+    """Each partition checkpoints at its max turn_idx + 1 (the next turn
+    to process); a partition without rows checkpoints at 0."""
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        (f"conv-{c}", t, "user", f"level=INFO turn {t} of {c}", None, ts)
+        for c in range(12) for t in range(c + 1)
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    part_of = {
+        r.conv_id: r.part_id
+        for r in microbatch.with_part_id(df, 4).select("conv_id", "part_id").distinct().collect()
+    }
+    empty = part_of["conv-0"]
+    df = df.filter(~F.col("conv_id").isin([c for c, p in part_of.items() if p == empty]))
+    expected = dict.fromkeys(range(4), 0)
+    for conv, p in part_of.items():
+        if p != empty:
+            expected[p] = max(expected[p], int(conv.split("-")[1]) + 1)
+    assert list(expected.values()).count(0) == 1  # exactly one empty partition
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    microbatch.run_microbatch_ingest(spark, df, wh, n_parts=4, parts_per_batch=2)
+    assert wh.load_checkpoints(microbatch.SOURCE_ID) == expected
 
 
 def test_compact_preserves_data(spark, transcripts, tmp_path):
