@@ -32,8 +32,7 @@ SF0001 = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: per-sink, per-conversation posting-count summary."""
-    dfs = pipeline.run_pipeline(spark, SF0001)
-    return dfs["agg_terms"]
+    return pipeline.run_pipeline(spark, SF0001)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -5,15 +5,16 @@ Reference: /root/reference/src/main.go:50-71 dispatches subcommands
 src/args/args.go:241-261). This module reproduces that surface:
 
     python -m go_distributed_log_search_spark create  CONFIG.yaml
-    python -m go_distributed_log_search_spark index   NAME INPUT
+    python -m go_distributed_log_search_spark index   NAME INPUT  (file | - | kafka://)
     python -m go_distributed_log_search_spark search  NAME QUERY --limit 3
     python -m go_distributed_log_search_spark merge   NAME
     python -m go_distributed_log_search_spark drop    NAME
 
 with ``--warehouse DIR`` (default ./spark-warehouse) standing in for the
 reference's ``--db`` catalog + object-storage pair. The catalog row for an
-index is its stored YAML config (create.go:49-53); ``index`` runs the
-schema-driven S1+P1 ingest (unclaimed keys -> ``_dynamic``); ``search``
+index is its stored YAML config (create.go:49-53); ``index`` reads its
+input through the one source dispatch and runs the schema-driven S1+P1
+decode (unclaimed keys -> ``_dynamic``); ``search``
 runs the P10 substring predicate + A3 additive scorer with true top-k and
 re-expands ``_dynamic`` into the output JSON (P9, search.go:318-326);
 ``merge`` is the read-repartition-rewrite compaction (merge.go:24-85);
@@ -28,12 +29,13 @@ import os
 import sys
 import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .operators.search import substring_search
 from .schema import IndexSchema, load_schema
 from .sources.catalog import Warehouse
-from .sources.jsonl import read_jsonl_indexed
+from .sources.jsonl import connect_to_source, read_jsonl_indexed
 
 
 def _schema_path(wh: Warehouse, name: str) -> str:
@@ -61,13 +63,17 @@ def cmd_create(spark: SparkSession, wh: Warehouse, args) -> int:
 
 
 def cmd_index(spark: SparkSession, wh: Warehouse, args) -> int:
-    """index.go:86-231: one batch = one UUID-keyed commit + lineage row."""
+    """index.go:86-231: one batch = one UUID-keyed commit + lineage row.
+    The quarantined lines are counted by the write job itself."""
     schema = _load_index_schema(wh, args.name)
-    df = read_jsonl_indexed(spark, args.input, schema, keep_corrupt=True)
+    quarantined = Observation()
+    df = read_jsonl_indexed(
+        connect_to_source(spark, args.input), schema, keep_corrupt=True
+    ).observe(quarantined, F.count_if("_corrupt").alias("n"))
     batch_id = str(uuid.uuid4())
     good = df.filter(~df["_corrupt"]).drop("_corrupt")
     n = wh.append_batch(good, args.name, batch_id)
-    n_corrupt = df.filter(df["_corrupt"]).count()
+    n_corrupt = quarantined.get["n"]
     wh.record_lineage_many(batch_id, {args.name: n})
     print(f"indexed {n} docs into '{args.name}' (batch {batch_id[:8]}, "
           f"{n_corrupt} corrupt quarantined)")
@@ -136,9 +142,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("config")
     p.set_defaults(fn=cmd_create)
 
-    p = sub.add_parser("index", help="ingest a JSONL file / - (stdin) into an index")
+    p = sub.add_parser("index", help="ingest a JSONL file / - (stdin) / kafka:// into an index")
     p.add_argument("name")
-    p.add_argument("input")
+    p.add_argument("input", help="a JSONL file, - (stdin) or kafka://host:port/topic")
     p.set_defaults(fn=cmd_index)
 
     p = sub.add_parser("search", help="substring search with additive scoring")

@@ -7,10 +7,11 @@ Reference (/root/reference/README.md:56-66):
     toshokan search hdfs-logs "INFO" --limit 3 # search
 
 Spark restatement: ``load_schema`` (config/mod.go:145-273 analog) derives
-the typed StructType, ``read_jsonl_indexed`` ingests the JSONL with claimed
-fields parsed and unclaimed keys in ``_dynamic`` (index.go:139-156), and
-``substring_search`` applies the P10 predicate + A3 additive scorer
-(search.go:222-264) with true top-k.
+the typed StructType, ``connect_to_source`` reads the JSONL lines and
+``read_jsonl_indexed`` decodes them with claimed fields parsed and
+unclaimed keys in ``_dynamic`` (index.go:139-156), and ``substring_search``
+applies the P10 predicate + A3 additive scorer (search.go:222-264) with
+true top-k.
 
 The repo-local fixture mirrors the *shape* of the reference's
 tests/hdfs-logs-multitenants-10000.jsonl (attributes.class / body /
@@ -27,7 +28,7 @@ from pyspark.sql import functions as F
 
 from .operators.search import substring_search
 from .schema import IndexSchema, load_schema
-from .sources.jsonl import read_jsonl_indexed
+from .sources.jsonl import connect_to_source, read_jsonl_indexed
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURE_JSONL = os.path.join(REPO_ROOT, "tests", "fixtures", "hdfs_logs.jsonl")
@@ -46,8 +47,9 @@ def index_jsonl(
     jsonl_path: str = FIXTURE_JSONL,
     keep_corrupt: bool = True,
 ) -> DataFrame:
-    """`index` analog: schema-driven JSONL ingest (S1 + P1-P9)."""
-    return read_jsonl_indexed(spark, jsonl_path, schema, keep_corrupt=keep_corrupt)
+    """`index` analog: source dispatch + schema-driven decode (S1 + P1-P9)."""
+    lines = connect_to_source(spark, jsonl_path)
+    return read_jsonl_indexed(lines, schema, keep_corrupt=keep_corrupt)
 
 
 def quick_demo(

@@ -1,16 +1,12 @@
-"""Porter stemmers — the ``en_stem`` tokenizer's stemming stage.
+"""Porter2 stemmer — the ``en_stem`` tokenizer's stemming stage.
 
 Reference parity target: /root/reference/src/config/mod.go:53-58 declares
 ``en_stem`` per text field; Bluge applies a snowball English (Porter2)
-stemmer at index time (src/commands/index.go:174). Two implementations,
-both from public specs:
-
-- ``porter_stem`` — the classic algorithm (M.F. Porter, "An algorithm for
-  suffix stripping", Program 14(3), 1980), kept for comparison/tests;
-- ``porter2_stem`` — the snowball "english" revision (snowballstem.org
-  spec): y-marking, R1/R2 regions with gener/commun/arsen prefixes,
-  exceptional forms, revised suffix tables. This is what ``en_stem``
-  uses, closing the round-2/3 "classic-Porter approximation" delta.
+stemmer at index time (src/commands/index.go:174). ``porter2_stem`` is the
+snowball "english" algorithm (M.F. Porter, snowballstem.org spec — public
+knowledge): y-marking, R1/R2 regions with gener/commun/arsen prefixes,
+exceptional forms, the ied/ies and li rules, and the step-2/3/4 suffix
+tables of the revised algorithm.
 
 Execution shape: pure-Python per token, applied inside an Arrow-batched
 pandas UDF over the token ARRAY column — one Python roundtrip per batch,
@@ -19,168 +15,6 @@ fields whose schema declares it; the pipeline hot path uses ``default``.
 """
 
 from __future__ import annotations
-
-
-def _is_cons(w: str, i: int) -> bool:
-    c = w[i]
-    if c in "aeiou":
-        return False
-    if c == "y":
-        return i == 0 or not _is_cons(w, i - 1)
-    return True
-
-
-def _measure(stem: str) -> int:
-    """m in [C](VC)^m[V]: the number of vowel-group->consonant-group
-    transitions."""
-    m = 0
-    prev_cons = None
-    for i in range(len(stem)):
-        cons = _is_cons(stem, i)
-        if prev_cons is False and cons:
-            m += 1
-        prev_cons = cons
-    return m
-
-
-def _has_vowel(stem: str) -> bool:
-    return any(not _is_cons(stem, i) for i in range(len(stem)))
-
-
-def _ends_double_cons(stem: str) -> bool:
-    return (
-        len(stem) >= 2
-        and stem[-1] == stem[-2]
-        and _is_cons(stem, len(stem) - 1)
-    )
-
-
-def _ends_cvc(stem: str) -> bool:
-    """*o: ends consonant-vowel-consonant, final consonant not w/x/y."""
-    if len(stem) < 3:
-        return False
-    return (
-        _is_cons(stem, len(stem) - 3)
-        and not _is_cons(stem, len(stem) - 2)
-        and _is_cons(stem, len(stem) - 1)
-        and stem[-1] not in "wxy"
-    )
-
-
-def _replace(word: str, suffix: str, repl: str, min_m: int) -> str | None:
-    """If word ends with suffix and the remaining stem has m > min_m,
-    return stem+repl, else None."""
-    if not word.endswith(suffix):
-        return None
-    stem = word[: len(word) - len(suffix)]
-    if _measure(stem) > min_m:
-        return stem + repl
-    return word  # suffix matched but condition failed: rule consumed
-
-
-_STEP2 = [
-    ("ational", "ate"), ("tional", "tion"), ("enci", "ence"), ("anci", "ance"),
-    ("izer", "ize"), ("abli", "able"), ("alli", "al"), ("entli", "ent"),
-    ("eli", "e"), ("ousli", "ous"), ("ization", "ize"), ("ation", "ate"),
-    ("ator", "ate"), ("alism", "al"), ("iveness", "ive"), ("fulness", "ful"),
-    ("ousness", "ous"), ("aliti", "al"), ("iviti", "ive"), ("biliti", "ble"),
-]
-
-_STEP3 = [
-    ("icate", "ic"), ("ative", ""), ("alize", "al"), ("iciti", "ic"),
-    ("ical", "ic"), ("ful", ""), ("ness", ""),
-]
-
-_STEP4 = [
-    "al", "ance", "ence", "er", "ic", "able", "ible", "ant", "ement",
-    "ment", "ent", "ion", "ou", "ism", "ate", "iti", "ous", "ive", "ize",
-]
-
-
-def porter_stem(word: str) -> str:
-    """Classic Porter stem of a lowercase word."""
-    if len(word) <= 2:
-        return word
-    w = word
-
-    # step 1a
-    if w.endswith("sses"):
-        w = w[:-2]
-    elif w.endswith("ies"):
-        w = w[:-2]
-    elif w.endswith("ss"):
-        pass
-    elif w.endswith("s"):
-        w = w[:-1]
-
-    # step 1b
-    did_1b = False
-    if w.endswith("eed"):
-        if _measure(w[:-3]) > 0:
-            w = w[:-1]
-    elif w.endswith("ed"):
-        if _has_vowel(w[:-2]):
-            w = w[:-2]
-            did_1b = True
-    elif w.endswith("ing"):
-        if _has_vowel(w[:-3]):
-            w = w[:-3]
-            did_1b = True
-    if did_1b:
-        if w.endswith(("at", "bl", "iz")):
-            w += "e"
-        elif _ends_double_cons(w) and not w.endswith(("l", "s", "z")):
-            w = w[:-1]
-        elif _measure(w) == 1 and _ends_cvc(w):
-            w += "e"
-
-    # step 1c
-    if w.endswith("y") and _has_vowel(w[:-1]):
-        w = w[:-1] + "i"
-
-    # step 2 (m > 0), longest match first by scan order
-    for suf, repl in _STEP2:
-        if w.endswith(suf):
-            w = _replace(w, suf, repl, 0)
-            break
-
-    # step 3 (m > 0)
-    for suf, repl in _STEP3:
-        if w.endswith(suf):
-            w = _replace(w, suf, repl, 0)
-            break
-
-    # step 4 (m > 1); (s|t)ion keeps the s/t
-    for suf in _STEP4:
-        if w.endswith(suf):
-            stem = w[: len(w) - len(suf)]
-            if suf == "ion" and not stem.endswith(("s", "t")):
-                break
-            if _measure(stem) > 1:
-                w = stem
-            break
-
-    # step 5a
-    if w.endswith("e"):
-        stem = w[:-1]
-        m = _measure(stem)
-        if m > 1 or (m == 1 and not _ends_cvc(stem)):
-            w = stem
-
-    # step 5b
-    if _measure(w) > 1 and _ends_double_cons(w) and w.endswith("l"):
-        w = w[:-1]
-
-    return w
-
-
-# ------------------------------------------------------------- Porter2
-# The snowball "english" stemmer (M.F. Porter, snowballstem.org spec —
-# public knowledge), i.e. exactly what Bluge applies for `en_stem`
-# (reference: src/config/mod.go:53-58 -> blevesearch snowball en).
-# Differences from the classic algorithm above: y-marking, R1/R2 regions
-# (with gener/commun/arsen prefixes), exceptional forms, the ied/ies and
-# li rules, and revised step-2/3/4 suffix tables.
 
 _P2_EXC1 = {
     "skis": "ski", "skies": "sky", "dying": "die", "lying": "lie",

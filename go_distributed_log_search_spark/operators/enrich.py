@@ -57,18 +57,11 @@ def skew_safe_join(
     return hot.unionByName(cold)
 
 
-def enrich_turns(
-    df: DataFrame,
-    spark: SparkSession,
-    roles: DataFrame | None = None,
-    tools: DataFrame | None = None,
-) -> DataFrame:
+def enrich_turns(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Left broadcast joins: role dim always matches; tool dim is left so
     unmatched/NULL tools survive with null attributes (FIXTURES.md §2)."""
-    roles = roles if roles is not None else dim_roles_df(spark)
-    tools = tools if tools is not None else dim_tools_df(spark)
-    return df.join(F.broadcast(roles), on="role", how="left").join(
-        F.broadcast(tools), on="tool", how="left"
+    return df.join(F.broadcast(dim_roles_df(spark)), on="role", how="left").join(
+        F.broadcast(dim_tools_df(spark)), on="tool", how="left"
     )
 
 

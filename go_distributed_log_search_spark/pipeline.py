@@ -29,19 +29,11 @@ def parsed_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enrich.enrich_turns(parse.parse_turns(df), spark)
 
 
-def run_pipeline(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Full flow; returns the principal DataFrames (lazy)."""
-    base = transcripts_df(spark, sf_dir)
-    enriched = parsed_enriched(spark, sf_dir)
-    tagged = route.routed(enriched)
+def run_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full flow; returns the per-sink posting counts (lazy)."""
     # heavy-hitter detection counts the raw transcripts (pre-parse plan:
     # just the conv_id column) rather than the routed frame, so its one
     # count job doesn't drag the parse regexes along
-    hot = aggregate.detect_hot_keys(base, "conv_id")
-    return {
-        "enriched": enriched,
-        "routed": tagged,
-        "route_counts": route.route_counts(enriched),
-        "agg_terms": aggregate.term_counts(tagged, hot_keys=hot),
-        "ordering": aggregate.ordering_check(base),
-    }
+    hot = aggregate.detect_hot_keys(transcripts_df(spark, sf_dir), "conv_id")
+    tagged = route.routed(parsed_enriched(spark, sf_dir))
+    return aggregate.term_counts(tagged, hot_keys=hot)

@@ -1,19 +1,26 @@
-"""JSONL / stdin / Kafka source dispatch — S1/S2/S3/S4.
+"""Source dispatch and JSON-line decode — S1/S2/S3/S4.
 
 Reference: /root/reference/src/commands/sources/mod.go:52-67 routes an input
 string: ``kafka://host/topic`` -> Kafka consumer, otherwise a file path ->
-line-by-line JSONL reader (buf_source.go:22-31), or stdin.
+line-by-line JSONL reader (buf_source.go:22-31), or stdin; every source then
+feeds the one schema-driven field projection (commands/index.go:139-156).
 
-Spark restatement: everything returns a DataFrame.
-- JSONL file: spark.read.text + from_json against the declared schema —
-  blank lines skipped (buf_source.go:56-58 parity), bad JSON surfaces as a
-  ``_corrupt`` flag column instead of aborting the batch (the reference
-  errors the whole run on one bad line; at 100 TB that is not an option,
-  so the engine quarantines instead — documented deviation).
-- stdin: read driver-side (small control-plane inputs only) into a local
-  DataFrame.
-- kafka://: Structured Streaming source; requires the Kafka connector jar
-  at runtime (absent in this sandbox -> clear ImportError-style failure).
+Spark restatement, one of each:
+
+- one dispatch, ``connect_to_source``: every input becomes a DataFrame of
+  raw lines in a ``value`` string column — a JSONL path through
+  spark.read.text, ``-`` from stdin read driver-side (control-plane sized
+  inputs), ``kafka://`` through the Kafka source (which also keeps each
+  record's ``partition`` and ``offset``; it needs the spark-sql-kafka
+  connector jar at runtime, absent in this sandbox -> DATA_SOURCE_NOT_FOUND);
+- one decoder, ``read_jsonl_indexed``: blank lines skipped
+  (buf_source.go:56-58 parity), claimed fields typed, the rest in
+  ``_dynamic``; columns other than ``value`` pass through unchanged;
+- one quarantine rule: ``_corrupt`` is true exactly when a line does not
+  parse as a JSON object (Spark's JSON reader parses the first value on
+  the line). The reference errors the whole run on one bad line; at
+  100 TB that is not an option, so the engine flags the line instead —
+  documented deviation.
 """
 
 from __future__ import annotations
@@ -22,38 +29,6 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def read_jsonl(
-    spark: SparkSession, path: str, schema: T.StructType, keep_corrupt: bool = True
-) -> DataFrame:
-    """S1: newline-delimited JSON with blank-line skip and corrupt-row
-    quarantine. The parsed struct is exploded into top-level columns."""
-    # Corrupt detection: since Spark 3.0 PERMISSIVE from_json returns a row
-    # of nulls (NOT a null struct) for malformed JSON, so `d IS NULL` never
-    # fires. The supported signal is a columnNameOfCorruptRecord field
-    # appended to the schema: non-null iff the line failed to parse.
-    corrupt_col = "_corrupt_record"
-    schema_with_corrupt = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
-    )
-    raw = spark.read.text(path)
-    nonblank = raw.filter(F.length(F.trim("value")) > 0)
-    parsed = nonblank.select(
-        F.from_json(
-            "value",
-            schema_with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt_col},
-        ).alias("d")
-    )
-    out = parsed.select(
-        *[F.col(f"d.{f.name}") for f in schema.fields],
-        F.col(f"d.{corrupt_col}").isNotNull().alias("_corrupt"),
-    )
-    if not keep_corrupt:
-        out = out.filter(~F.col("_corrupt")).drop("_corrupt")
-    return out
 
 
 def _claimed_field_expr(spec, raw_map):
@@ -89,38 +64,35 @@ def _claimed_field_expr(spec, raw_map):
 
 
 def read_jsonl_indexed(
-    spark: SparkSession, path: str, index_schema, keep_corrupt: bool = True
+    lines: DataFrame, index_schema, keep_corrupt: bool = True
 ) -> DataFrame:
-    """S1 + P1 + P2/P4/P5: schema-driven ingest of a YAML-declared index
-    schema (schema.IndexSchema): claimed fields parsed to their declared
-    Spark types WITH the reference's per-field string parsers
+    """S1 + P1 + P2/P4/P5: schema-driven decode of raw JSON lines (the
+    ``value`` column of ``connect_to_source``) against a YAML-declared
+    index schema (schema.IndexSchema): claimed fields parsed to their
+    declared Spark types WITH the reference's per-field string parsers
     (string->number u64 guard, multi-format datetime + epoch auto-scale,
     IP canonicalization), every UNCLAIMED top-level key landing in the
     ``_dynamic`` map<string,string> (commands/index.go:139-156 —
     parse+remove claimed, remainder to _dynamic). Nested-object leftovers
     are stringified JSON, the analog of the reference's fmt.Sprintf("%%v")
-    rendering.
+    rendering. Any other column of ``lines`` (kafka ``partition`` /
+    ``offset``) passes through unchanged.
     """
     struct = index_schema.to_struct_type(with_dynamic=False)
     claimed = [f.name for f in struct.fields]
-    corrupt_col = "_corrupt_record"
-    schema_with_corrupt = T.StructType(
-        list(struct.fields) + [T.StructField(corrupt_col, T.StringType())]
-    )
-    raw = spark.read.text(path)
-    nonblank = raw.filter(F.length(F.trim("value")) > 0)
+    passthrough = [c for c in lines.columns if c != "value"]
+    nonblank = lines.filter(F.length(F.trim("value")) > 0)
     parsed = nonblank.select(
-        F.from_json(
-            "value",
-            schema_with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": corrupt_col},
-        ).alias("d"),
+        # PERMISSIVE (the default): a malformed line parses to all NULLs,
+        # a mistyped field to a NULL field
+        F.from_json("value", struct).alias("d"),
         # second parse of the same line as map<string,string>: the raw
         # string form of every top-level key — the leftover pool for
         # ``_dynamic`` AND the input to the per-field string parsers (one
         # extra from_json over the already-in-memory line; both evaluate
         # inside the same codegen stage)
         F.from_json("value", "map<string,string>").alias("_all"),
+        *passthrough,
     )
     out = parsed.select(
         *[
@@ -128,23 +100,16 @@ def read_jsonl_indexed(
             for spec in index_schema.fields
         ],
         F.map_filter(F.col("_all"), lambda k, v: ~k.isin(*claimed)).alias("_dynamic"),
-        # corrupt = the LINE is not a JSON object (map parse failed).
-        # The struct-parse corrupt column would also fire on a mere
-        # field-level type mismatch (e.g. {"tenant_id": "61"}), which the
-        # reference PARSES via its string parsers rather than rejecting —
+        *passthrough,
+        # corrupt = the LINE is not a JSON object (map parse failed). A
+        # field-level type mismatch (e.g. {"tenant_id": "61"}) is not
+        # corrupt: the reference PARSES it via its string parsers, and
         # field-level recovery is exactly what _claimed_field_expr does.
         F.col("_all").isNull().alias("_corrupt"),
     )
     if not keep_corrupt:
         out = out.filter(~F.col("_corrupt")).drop("_corrupt")
     return out
-
-
-def read_stdin(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    """S2: stdin JSONL (driver-side; control-plane sized inputs)."""
-    lines = [ln for ln in sys.stdin.read().splitlines() if ln.strip()]
-    raw = spark.createDataFrame([(ln,) for ln in lines], ["value"])
-    return raw.select(F.from_json("value", schema).alias("d")).select("d.*")
 
 
 def kafka_options(url: str, stream: bool) -> dict[str, str]:
@@ -167,35 +132,35 @@ def kafka_options(url: str, stream: bool) -> dict[str, str]:
 # lookupDataSource (registerPython refuses to shadow it even when the
 # connector jar is absent), so tests swap this for a registered Python
 # mock source with the connector's output schema and run the whole
-# read_kafka path — URL parse, option wiring, load(), projection,
-# from_json decode — end to end without a broker (test_sources.py).
+# connect_to_source path — URL parse, option wiring, load(), projection,
+# then the read_jsonl_indexed decode — end to end without a broker
+# (test_sources.py).
 KAFKA_FORMAT = "kafka"
 
 
-def read_kafka(
-    spark: SparkSession, url: str, schema: T.StructType, stream: bool
-) -> DataFrame:
-    """S3: Kafka source; requires the spark-sql-kafka connector jar at
-    runtime (absent in this sandbox -> DATA_SOURCE_NOT_FOUND)."""
+def read_kafka(spark: SparkSession, url: str, stream: bool) -> DataFrame:
+    """S3: Kafka records as raw lines (``value`` as a string, plus
+    ``partition`` and ``offset``); requires the spark-sql-kafka connector
+    jar at runtime (absent in this sandbox -> DATA_SOURCE_NOT_FOUND)."""
     opts = kafka_options(url, stream)
     reader = spark.readStream if stream else spark.read
     df = reader.format(KAFKA_FORMAT).options(**opts).load()
     return df.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("d"),
-        "partition",
-        "offset",
-    ).select("d.*", "partition", "offset")
+        F.col("value").cast("string").alias("value"), "partition", "offset"
+    )
 
 
 def connect_to_source(
-    spark: SparkSession, input_: str, schema: T.StructType, stream: bool = False
+    spark: SparkSession, input_: str, stream: bool = False
 ) -> DataFrame:
-    """S4 dispatch (sources/mod.go:52-67): kafka:// | '-' (stdin) | path.
-    --stream rejected for files, exactly as the reference."""
+    """S4 dispatch (sources/mod.go:52-67): kafka:// | '-' (stdin) | path,
+    each as raw lines for ``read_jsonl_indexed``. --stream rejected for
+    files, exactly as the reference."""
     if input_.startswith("kafka://"):
-        return read_kafka(spark, input_, schema, stream)
+        return read_kafka(spark, input_, stream)
     if stream:
         raise ValueError("--stream is only supported for kafka:// sources")
     if input_ == "-":
-        return read_stdin(spark, schema)
-    return read_jsonl(spark, input_, schema)
+        lines = sys.stdin.read().splitlines()
+        return spark.createDataFrame([(ln,) for ln in lines], "value string")
+    return spark.read.text(input_)

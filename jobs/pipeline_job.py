@@ -14,7 +14,7 @@ analog is its single deployable binary running the ``index`` command
 
 Output: ONE JSON line on stdout —
   {"n_turns": ..., "sink_counts": {"errors": ..., ...},
-   "sink_convs": {...}, "n_term_rows": ...|null, "sec": ...}
+   "sink_convs": {...}, "sec": ...}
 Per-sink counts are the reference's per-shard doc-count parity surface;
 the driver-side JSON is what tests/test_spark_submit.py compares across
 two parallelism levels and against the DuckDB oracle.
@@ -24,34 +24,28 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--sf-dir", default=os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"))
-    ap.add_argument("--job", choices=("counts", "terms"), default="counts",
-                    help="counts: per-sink route counts; terms: also run "
-                         "the salted posting-count aggregation")
+    ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--out", default=None,
                     help="optional warehouse dir: commit the input as one "
                          "batch (sink_* tables, agg_terms, lineage)")
-    ap.add_argument("--cpus", type=int, default=None,
-                    help="parallelism level; defaults to SPARK_GRAFT_CPUS")
     args = ap.parse_args(argv)
 
     # Imports resolved from the --py-files zip (or an installed package) —
     # NOT from a repo checkout on sys.path.
     from go_distributed_log_search_spark import pipeline
-    from go_distributed_log_search_spark.operators import aggregate, route
+    from go_distributed_log_search_spark.operators import route
     from go_distributed_log_search_spark.session import get_spark
     from go_distributed_log_search_spark.transcripts import transcripts_df
 
     t0 = time.time()
-    spark = get_spark("pipeline-job", cpus=args.cpus)
+    # the parallelism level comes from SPARK_GRAFT_CPUS (submit.submit_env)
+    spark = get_spark("pipeline-job")
     base = transcripts_df(spark, args.sf_dir)
     enriched = pipeline.parsed_enriched(spark, args.sf_dir)
 
@@ -60,11 +54,6 @@ def main(argv: list[str] | None = None) -> int:
         r["sink"]: (r["n_rows"], r["n_convs"])
         for r in route.route_counts(enriched).collect()
     }
-
-    n_term_rows = None
-    if args.job == "terms":
-        hot = aggregate.detect_hot_keys(base, "conv_id")
-        n_term_rows = aggregate.term_counts(route.routed(enriched), hot_keys=hot).count()
 
     if args.out:
         # the submitted job IS the reference's `index` command end to end:
@@ -79,7 +68,6 @@ def main(argv: list[str] | None = None) -> int:
         "n_turns": n_turns,
         "sink_counts": {s: c[0] for s, c in sorted(counts.items())},
         "sink_convs": {s: c[1] for s, c in sorted(counts.items())},
-        "n_term_rows": n_term_rows,
         "sec": round(time.time() - t0, 3),
     }
     print(json.dumps(out), flush=True)

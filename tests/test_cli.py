@@ -2,6 +2,7 @@
 temp warehouse, mirroring the reference Quick Demo (README.md:56-66)."""
 
 import glob
+import io
 import json
 
 import pytest
@@ -28,6 +29,28 @@ def test_index(spark, wh_dir, capsys):
     out = capsys.readouterr().out
     assert "indexed 13 docs" in out
     assert "1 corrupt quarantined" in out
+
+
+def test_index_stdin(spark, tmp_path, monkeypatch, capsys):
+    """`index NAME -` reads the same lines from stdin through the one
+    source dispatch: same doc and quarantine counts as the file form, in
+    one Spark job (the write job also counts the quarantined lines)."""
+    wh = str(tmp_path)
+    assert run(spark, wh, "create", demo.FIXTURE_YAML) == 0
+    with open(demo.FIXTURE_JSONL) as f:
+        monkeypatch.setattr("sys.stdin", io.StringIO(f.read()))
+    sc = spark.sparkContext
+    sc.setJobGroup("cli_index_stdin", "cli_index_stdin")
+    try:
+        assert run(spark, wh, "index", "hdfs-logs", "-") == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    out = capsys.readouterr().out
+    assert "indexed 13 docs" in out
+    assert "1 corrupt quarantined" in out
+    # job-start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("cli_index_stdin")) == 1
 
 
 def test_search_quick_demo(spark, wh_dir, capsys):
