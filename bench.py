@@ -124,8 +124,8 @@ def _pipeline_job(spark, sf_dir: str, mult: int, terms: bool = True):
 
         return base.count(), run_counts
 
-    # Hot keys are counted from the compact base (one exact count job).
-    hot = aggregate.detect_hot_keys(base, "conv_id")
+    # The hot set is the scaled table's conv_id statistic (counted once
+    # when its cache was built), so term_counts runs no detection job.
     # num_partitions pinned so the physical plan is IDENTICAL at every
     # parallelism level (a real N vs 4N cluster comparison holds
     # shuffle.partitions constant too); 64 bounds per-task agg state
@@ -133,7 +133,7 @@ def _pipeline_job(spark, sf_dir: str, mult: int, terms: bool = True):
     # imbalance (~2.3x records across partitions, measured) makes the
     # second wave ragged; 128 smooths packing at every parallelism level
     # (measured: 24.7s -> 19.4s min at local[32])
-    aggs = aggregate.term_counts(tagged, hot_keys=hot, num_partitions=128)
+    aggs = aggregate.term_counts(tagged, num_partitions=128)
 
     def run():
         return aggs.count()

@@ -24,12 +24,16 @@ rows overload one reducer (requires huge clusters + extreme skew), and
 (b) non-combinable aggregates (collect_list/set). We therefore salt ONLY
 detected heavy-hitter keys:
 
-    1. one exact count job: per-key row counts (a small hash aggregate,
-       one row per distinct key) and the input total from an
-       ``Observation`` on the same scan. Keys above ``HOT_SHARE`` of the
-       input are heavy hitters; the hot set (at most ``MAX_HOT_KEYS``) is
-       broadcast as a literal IN-list. A sample would save nothing: it
-       still reads, and on a routed input parses, every row.
+    1. the hot set: keys above ``HOT_SHARE`` of the input (at most
+       ``MAX_HOT_KEYS``), broadcast as a literal IN-list. It is a table
+       statistic: ``transcripts.transcripts_df`` counts it once per cache
+       and carries it as the ``hot_keys`` metadata of ``conv_id``, which
+       every derived frame (parse, enrich, route, filters, joins) keeps,
+       so reading it costs no job. Only a frame without the statistic
+       pays ``detect_hot_keys``: one exact count job, per-key row counts
+       (a small hash aggregate, one row per distinct key) plus the input
+       total from an ``Observation`` on the same scan. A sample would save
+       nothing: it still reads, and on a routed input parses, every row.
     2. stage 1: groupBy(group, term, salt) where salt = hash(turn_idx) % N
        for hot keys, 0 otherwise -> partial counts. Cold keys aggregate
        fully here; hot keys split across <= N reducers.
@@ -49,6 +53,8 @@ from pyspark.sql import functions as F
 from ..functions.tokenize import tokenize
 
 NSALT = 16
+# column-metadata key of the hot-key statistic (a list of key values)
+HOT_KEYS = "hot_keys"
 # heavy-hitter threshold: a key owning > 1/(2 * shuffle partitions) of the
 # data can straggle a reducer; below that, partial agg absorbs it.
 HOT_SHARE = 1.0 / 64
@@ -74,6 +80,13 @@ def detect_hot_keys(df: DataFrame, key_col: str) -> list:
     )
     total = seen.get["rows"]
     return [r[0] for r in top if r["c"] > total * HOT_SHARE]
+
+
+def hot_keys_stat(df: DataFrame, key_col: str) -> list | None:
+    """The hot keys ``key_col`` carries as column metadata (set where its
+    table is written, see ``transcripts.transcripts_df``), or None when
+    the frame has no such statistic. Reads the schema only: no job."""
+    return df.schema[key_col].metadata.get(HOT_KEYS)
 
 
 def _terms(
@@ -141,9 +154,18 @@ def term_counts(
     The union of both branches scans the input twice; the scan is the cheap
     part (column-pruned compact rows) and the hot predicate is pushed to
     the scan. Results are identical across modes (pinned by tests).
+
+    ``hot_keys="auto"`` takes the hot set from the ``hot_keys`` metadata of
+    ``skew_col`` (``hot_keys_stat``; frames derived from
+    ``transcripts_df`` / ``transcripts_scaled_df`` carry it) and runs
+    ``detect_hot_keys``' one count job only for a frame without it. A
+    stale or wrong list costs balance, never correctness: the output does
+    not depend on the hot set.
     """
     if hot_keys == "auto" and skew_col in df.columns:
-        hot_keys = detect_hot_keys(df, skew_col)
+        hot_keys = hot_keys_stat(df, skew_col)
+        if hot_keys is None:
+            hot_keys = detect_hot_keys(df, skew_col)
     elif hot_keys == "auto":
         hot_keys = None
     hot = list(hot_keys or [])

@@ -30,10 +30,8 @@ def parsed_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full flow; returns the per-sink posting counts (lazy)."""
-    # heavy-hitter detection counts the raw transcripts (pre-parse plan:
-    # just the conv_id column) rather than the routed frame, so its one
-    # count job doesn't drag the parse regexes along
-    hot = aggregate.detect_hot_keys(transcripts_df(spark, sf_dir), "conv_id")
+    """Full flow; returns the per-sink posting counts (lazy). The hot set
+    is the transcripts table's ``conv_id`` statistic, carried through
+    parse, enrich and route: no detection job."""
     tagged = route.routed(parsed_enriched(spark, sf_dir))
-    return aggregate.term_counts(tagged, hot_keys=hot)
+    return aggregate.term_counts(tagged)

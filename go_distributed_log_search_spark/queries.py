@@ -735,9 +735,10 @@ def q_skew_join(spark, sf_dir):
     Zipf key: per-conversation metadata (turn counts) joined back onto
     turns. conv-hot-0/1 own ~40% of all turns, so a plain hash join puts
     40% of the corpus through two reducers; skew_safe_join routes the hot
-    keys through a broadcast branch (the known hot list here — detected
-    via detect_hot_keys in production) and hash-joins the balanced
-    remainder. Summary: turns per (role, conversation-size bucket).
+    keys through a broadcast branch (the hot list is the transcripts
+    table's conv_id statistic, read from column metadata without a job)
+    and hash-joins the balanced remainder. Summary: turns per (role,
+    conversation-size bucket).
     Oracle = a plain join, pinning that the split changes the plan, not
     the result."""
     from .operators import enrich
@@ -748,7 +749,7 @@ def q_skew_join(spark, sf_dir):
         t.select("conv_id", "role"),
         conv_dim,
         "conv_id",
-        hot_keys=["conv-hot-0", "conv-hot-1"],
+        hot_keys=aggregate.hot_keys_stat(t, "conv_id"),
     )
     bucket = (
         F.when(F.col("conv_turns") >= 100, "large")

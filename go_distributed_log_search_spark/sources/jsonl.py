@@ -16,11 +16,14 @@ Spark restatement, one of each:
 - one decoder, ``read_jsonl_indexed``: blank lines skipped
   (buf_source.go:56-58 parity), claimed fields typed, the rest in
   ``_dynamic``; columns other than ``value`` pass through unchanged;
-- one quarantine rule: ``_corrupt`` is true exactly when a line does not
-  parse as a JSON object (Spark's JSON reader parses the first value on
-  the line). The reference errors the whole run on one bad line; at
-  100 TB that is not an option, so the engine flags the line instead —
-  documented deviation.
+- one quarantine rule: ``_corrupt`` is true exactly when a line is not
+  exactly one JSON object — malformed, a non-object value, or an object
+  followed by anything but whitespace (``{"a":1} x``, ``{"a":1} {"b":2}``,
+  ``{"a":1},{"b":2}``). Spark's JSON reader stops after the first value
+  on a line, so the line is parsed wrapped in ``[...]``, where trailing
+  content is a syntax error or a second element. The reference errors
+  the whole run on one bad line; at 100 TB that is not an option, so the
+  engine flags the line instead — documented deviation.
 """
 
 from __future__ import annotations
@@ -86,12 +89,19 @@ def read_jsonl_indexed(
         # PERMISSIVE (the default): a malformed line parses to all NULLs,
         # a mistyped field to a NULL field
         F.from_json("value", struct).alias("d"),
-        # second parse of the same line as map<string,string>: the raw
-        # string form of every top-level key — the leftover pool for
-        # ``_dynamic`` AND the input to the per-field string parsers (one
-        # extra from_json over the already-in-memory line; both evaluate
-        # inside the same codegen stage)
-        F.from_json("value", "map<string,string>").alias("_all"),
+        # second parse of the same line, wrapped as a JSON array of
+        # map<string,string>: its one element is the raw string form of
+        # every top-level key — the leftover pool for ``_dynamic`` AND the
+        # input to the per-field string parsers (one extra from_json over
+        # the already-in-memory line; both evaluate inside the same
+        # codegen stage). The wrapping is what catches trailing content.
+        F.from_json(
+            F.concat(F.lit("["), "value", F.lit("]")), "array<map<string,string>>"
+        ).alias("_objs"),
+        *passthrough,
+    ).select(
+        "d",
+        F.when(F.size("_objs") == 1, F.get("_objs", 0)).alias("_all"),
         *passthrough,
     )
     out = parsed.select(
@@ -101,10 +111,11 @@ def read_jsonl_indexed(
         ],
         F.map_filter(F.col("_all"), lambda k, v: ~k.isin(*claimed)).alias("_dynamic"),
         *passthrough,
-        # corrupt = the LINE is not a JSON object (map parse failed). A
-        # field-level type mismatch (e.g. {"tenant_id": "61"}) is not
-        # corrupt: the reference PARSES it via its string parsers, and
-        # field-level recovery is exactly what _claimed_field_expr does.
+        # corrupt = the LINE is not exactly one JSON object (the wrapped
+        # parse holds no single non-null map). A field-level type mismatch
+        # (e.g. {"tenant_id": "61"}) is not corrupt: the reference PARSES
+        # it via its string parsers, and field-level recovery is exactly
+        # what _claimed_field_expr does.
         F.col("_all").isNull().alias("_corrupt"),
     )
     if not keep_corrupt:

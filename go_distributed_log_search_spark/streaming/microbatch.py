@@ -63,8 +63,10 @@ def commit_batch(
     """
     enriched = enrich.enrich_turns(parse.parse_turns(batch_df), spark)
     # persisted: each append is a separate job over full rows, and
-    # re-deriving the routed frame per table would re-parse the batch
-    routed = route.routed(enriched).persist()
+    # re-deriving the routed frame per table would re-parse the batch.
+    # conv_id's metadata is dropped first: it holds the SOURCE table's hot
+    # keys (transcripts_df), and parquet would store them as the sink's.
+    routed = route.routed(enriched).withMetadata("conv_id", {}).persist()
     try:
         # 1. data commits (S5)
         counts: dict[str, int] = {}

@@ -24,10 +24,13 @@ Properties engineered into the view (mirroring FIXTURES.md §1):
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .operators.aggregate import HOT_KEYS, detect_hot_keys
 
 # Shared SQL template. {events}/{documents} are table references:
 # Spark side gets  parquet.`/path/events.parquet`
@@ -200,6 +203,13 @@ def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     The cache is deterministic (seeded inputs, deterministic SQL) and
     cross-checked against DuckDB running the same SQL in
     tests/test_transcripts_view.py.
+
+    Table statistics: the ``conv_id`` heavy hitters are counted once per
+    cache and kept in the sidecar ``_hot_keys.json`` inside the cache
+    directory (see ``_read_with_stats``). The returned frame carries them
+    as the ``hot_keys`` metadata of its ``conv_id`` column, which
+    survives parse, enrich and route, so ``aggregate.term_counts`` reads
+    its hot set from there instead of running a count job per call.
     """
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     # ROUND-ROBIN layout — deliberately NOT partitioned by conv_id. The
@@ -232,7 +242,7 @@ def transcripts_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(path)
         )
-    return spark.read.parquet(path)
+    return _read_with_stats(spark, path)
 
 
 def transcripts_scaled_df(
@@ -246,6 +256,9 @@ def transcripts_scaled_df(
     generated code. In-plan explode-replication would embed ``mult`` as a
     codegen literal: every new factor pays a fresh interpreted+JIT ramp
     (minutes at 10^6 rows in this sandbox).
+
+    Carries ``conv_id`` statistics like ``transcripts_df``, counted over
+    the replicated table (its replicas are distinct conversations).
     """
     if mult <= 1:
         return transcripts_df(spark, sf_dir)
@@ -260,7 +273,32 @@ def transcripts_scaled_df(
             "conv_id", F.concat_ws("#", "conv_id", F.col("rep").cast("string"))
         ).drop("rep")
         out.repartition(64).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return _read_with_stats(spark, path)
+
+
+def _read_with_stats(spark: SparkSession, path: str) -> DataFrame:
+    """Scan a transcripts cache with its ``conv_id`` heavy hitters attached
+    as column metadata (``{"hot_keys": [...]}``).
+
+    The list lives in ``_hot_keys.json`` next to the parquet files (Spark's
+    reader skips ``_``-prefixed names). A cache without it — just written,
+    or written before the sidecar existed — gets it here: one exact count
+    job over the ``conv_id`` column, written atomically so concurrent
+    sessions sharing the cache never read a partial file. Every later read
+    runs no count job.
+    """
+    df = spark.read.parquet(path)
+    sidecar = os.path.join(path, "_hot_keys.json")
+    try:
+        with open(sidecar) as f:
+            hot = json.load(f)
+    except FileNotFoundError:
+        hot = detect_hot_keys(df, "conv_id")
+        fd, tmp = tempfile.mkstemp(prefix="_hot_keys.", suffix=".tmp", dir=path)
+        with os.fdopen(fd, "w") as f:
+            json.dump(hot, f)
+        os.replace(tmp, sidecar)
+    return df.withMetadata("conv_id", {HOT_KEYS: hot})
 
 
 def dim_roles_df(spark: SparkSession) -> DataFrame:

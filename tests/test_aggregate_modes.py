@@ -33,6 +33,9 @@ def test_modes_identical(spark, skewed):
         {"hot_keys": []},
     ):
         assert _counts(aggregate.term_counts(skewed, **kwargs)) == base, kwargs
+    # "auto" trusts the conv_id statistic; a wrong one costs balance only
+    stale = skewed.withMetadata("conv_id", {"hot_keys": ["conv-1", "absent"]})
+    assert _counts(aggregate.term_counts(stale)) == base
 
 
 def test_skew_col_not_in_group_cols_no_duplicates(spark, skewed):

@@ -84,3 +84,13 @@ def test_lineage_counts_are_partition_rows(warehouses):
         assert set(on_disk) <= set(recorded), name
         assert recorded == {k: on_disk.get(k, 0) for k in recorded}, name
         assert all(recorded[(b, "agg_terms")] > 0 for b, _ in recorded), name
+
+
+def test_tables_do_not_inherit_source_stats(spark, warehouses):
+    """The input's conv_id carries the transcripts table's hot keys, and
+    parquet would store that metadata with the column: every committed
+    table must read back without it (its hot set is not the source's)."""
+    assert aggregate.hot_keys_stat(transcripts_df(spark, SF0001), "conv_id")
+    for name, wh, _ in warehouses:
+        for table in TABLES.values():
+            assert wh.read(table).schema["conv_id"].metadata == {}, (name, table)

@@ -97,6 +97,27 @@ def test_kafka_option_contract():
         jsonl.kafka_options("kafka:///topic-no-host", stream=True)
 
 
+def test_quarantine_is_exactly_one_object(spark):
+    """A line is clean only when it holds exactly one JSON object: trailing
+    content after the object is flagged, while an empty object, padding
+    whitespace and nested values decode as before."""
+    flagged = ['{"a": 1} trailing', '{"a": 1} {"b": "y"}', '{"a": 1},{"b": "y"}',
+               "null", "[1]", '"s"']
+    clean = {
+        "{}": (None, None, {}),
+        '  {"a": 4, "b": "p"}  ': (4, "p", {}),
+        '{"a": 5, "c": {"x": [1, 2]}, "d": [1, {"y": 2}]}':
+            (5, None, {"c": '{"x":[1,2]}', "d": '[1,{"y":2}]'}),
+    }
+    # the line itself rides along as a pass-through column
+    lines = spark.createDataFrame(
+        [(ln, ln) for ln in [*flagged, *clean]], "value string, line string"
+    )
+    rows = jsonl.read_jsonl_indexed(lines, SCHEMA).collect()
+    assert sorted(r.line for r in rows if r._corrupt) == sorted(flagged)
+    assert {r.line: (r.a, r.b, r._dynamic) for r in rows if not r._corrupt} == clean
+
+
 def test_read_stdin(spark, monkeypatch):
     monkeypatch.setattr(
         "sys.stdin",
