@@ -115,7 +115,7 @@ def cmd_merge(spark: SparkSession, wh: Warehouse, args) -> int:
     if not wh.exists(args.name):
         raise SystemExit(f"index '{args.name}' has no data to merge")
     wh.compact(args.name, target_partitions=args.target_partitions)
-    print(f"merged '{args.name}' to {args.target_partitions} files")
+    print(f"merged '{args.name}' to one file per batch")
     return 0
 
 

@@ -4,8 +4,9 @@ The north star (BASELINE.json) calls for "vectorized pandas/Arrow UDFs
 apply[ing] compiled grok/regex patterns to the text column". Two engines are
 provided with identical semantics:
 
-1. ``prefix_extract`` — pure ``regexp_substr`` column expressions
-   (JVM-side, whole-stage codegen). This is the default hot path: Catalyst
+1. ``prefix_extract_sql`` — pure ``regexp_substr`` SQL expressions
+   (JVM-side, whole-stage codegen), built as SQL text with the patterns as
+   conf-independent literals. This is the default hot path: Catalyst
    regex beats any Python path and pushes the projection into codegen.
 2. ``grok_extract_pandas`` — a vectorized pandas UDF over Arrow batches with
    patterns compiled ONCE PER EXECUTOR (module-level cache, mirroring the
@@ -25,8 +26,9 @@ from functools import lru_cache
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from .sqltext import string_literal
 
 # Minimal public-grok-style base dictionary.
 GROK_PATTERNS: dict[str, str] = {
@@ -54,37 +56,30 @@ def grok_to_regex(grok: str) -> tuple[str, list[str]]:
     return _GROK_TOKEN.sub(sub, grok), fields
 
 
-# ---- engine 1: Catalyst expressions (default hot path) ----------------
+# ---- engine 1: Catalyst SQL expressions (default hot path) -----------
 
-def prefix_extract(col: Column, pattern: str, prefix_len: int) -> Column:
-    """Group extraction for the shape ``<fixed-prefix>(<group>)``: one
-    ``regexp_substr`` (NULL on no match, the analog of the reference
-    skipping unparsed fields — Go regex misses return empty) + a
-    constant-offset substring to drop the prefix. No second regex pass for
-    the empty-string check a nullif(regexp_extract) form needs.
+# value classes of ``key: value`` pairs in INFO bodies
+KV_LONG = r"\d+"
+KV_STR = r"[\w/.:]+"
+# any ``key: value`` pair (group 1 the key, group 2 the value): the pairs
+# parse_turns leaves unclaimed become its ``_dynamic`` map
+KV_PATTERN = rf"(\w+): ({KV_STR})"
+
+
+def prefix_extract_sql(text: str, pattern: str, prefix_len: int) -> str:
+    """SQL of the group extraction for the shape ``<fixed-prefix>(<group>)``
+    over the string expression ``text``: one ``regexp_substr`` (NULL on no
+    match, the analog of the reference skipping unparsed fields — Go regex
+    misses return empty) + a constant-offset substring to drop the prefix.
+    No second regex pass for the empty-string check a
+    nullif(regexp_extract) form needs.
     Value-identical to
-    ``nullif(regexp_extract(col, prefix + "(" + body + ")", 1), "")``
+    ``nullif(regexp_extract(text, prefix + "(" + body + ")", 1), "")``
     whenever the prefix has fixed length: both take the FIRST match of the
-    same pattern, and a ``+``-quantified group can never match empty. Round-6
-    measurement (sf0.1, 100k rows, noop sink, min-of-5): all six parse
-    extractions 43 ms -> 17 ms over the scan baseline (guide §1.2 step 2,
-    per-task work)."""
-    return F.substring(F.regexp_substr(col, F.lit(pattern)), prefix_len + 1, 2**30)
-
-
-# Transcript-pipeline extraction exprs (the flagship parse stage).
-def level_expr(text: Column) -> Column:
-    return prefix_extract(text, r"level=[A-Z]+", 6)
-
-
-def error_signature_expr(text: Column) -> Column:
-    return prefix_extract(text, r"sig=[A-Za-z]+", 4)
-
-
-def tool_marker_expr(text: Column) -> Column:
-    # the pattern's trailing space lands in the substr; rtrim restores the
-    # group-only value ([a-z]+ can never contain a space itself)
-    return F.rtrim(prefix_extract(text, r"<tool:[a-z]+ ", 6))
+    same pattern, and a ``+``-quantified group can never match empty.
+    Measured on sf0.1 (100k rows, noop sink, min-of-5): all six parse
+    extractions 43 ms -> 17 ms over the scan baseline."""
+    return f"substring(regexp_substr({text}, {string_literal(pattern)}), {prefix_len + 1})"
 
 
 def _kv_prefix(key: str) -> int:
@@ -94,13 +89,31 @@ def _kv_prefix(key: str) -> int:
     return len(key) + 2
 
 
-def kv_long_expr(text: Column, key: str) -> Column:
-    """Extract ``key: 123`` integer pairs from INFO bodies."""
-    return prefix_extract(text, rf"{key}: \d+", _kv_prefix(key)).try_cast("long")
+def kv_long_sql(text: str, key: str) -> str:
+    """``key: 123`` integer pairs from INFO bodies, as BIGINT."""
+    return f"try_cast({prefix_extract_sql(text, rf'{key}: {KV_LONG}', _kv_prefix(key))} AS BIGINT)"
 
 
-def kv_str_expr(text: Column, key: str) -> Column:
-    return prefix_extract(text, rf"{key}: [\w/.:]+", _kv_prefix(key))
+def kv_str_sql(text: str, key: str) -> str:
+    return prefix_extract_sql(text, rf"{key}: {KV_STR}", _kv_prefix(key))
+
+
+def turn_fields_sql(text: str) -> dict[str, str]:
+    """The transcript grok columns (the flagship parse stage): column name
+    -> SQL of its extraction from the string expression ``text``. The one
+    table of their patterns. Every value is a run of ASCII characters cut
+    out of ``text`` (a BIGINT one is a digit run; its decimal form drops
+    at most leading zeros, so it is still a substring)."""
+    return {
+        "level": prefix_extract_sql(text, r"level=[A-Z]+", 6),
+        "error_signature": prefix_extract_sql(text, r"sig=[A-Za-z]+", 4),
+        # the pattern's trailing space lands in the substr; rtrim restores
+        # the group-only value ([a-z]+ can never contain a space itself)
+        "tool_call": f"rtrim({prefix_extract_sql(text, '<tool:[a-z]+ ', 6)})",
+        "bytes": kv_long_sql(text, "bytes"),
+        "op": kv_str_sql(text, "op"),
+        "duration": kv_long_sql(text, "duration"),
+    }
 
 
 # ---- engine 2: vectorized pandas UDF grok (the Arrow slow path) -------

@@ -14,14 +14,15 @@ an additive sum of hardcoded per-field weights over the fields that matched
     any other string field         +2
     any string value in a nested map +3
 
-A document is kept iff score > 0 (search.go:258-264). The whole scorer is
-one Catalyst column expression — no UDF.
+A document is kept iff score > 0 (search.go:258-264). The predicate and
+the scorer are each one Catalyst expression built as SQL text (one
+``F.expr`` parse, not a chain of Column-API round trips) — no UDF. The
+query enters as a conf-independent literal (``sqltext.string_literal``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from .sqltext import column_ref, string_literal
 
 # search.go:230-243 weight classes by field name.
 FIELD_WEIGHTS: dict[str, float] = {
@@ -42,25 +43,29 @@ def field_weight(name: str) -> float:
     return FIELD_WEIGHTS.get(name.rsplit(".", 1)[-1], DEFAULT_STRING_WEIGHT)
 
 
-def contains_ci(col: Column, query: str) -> Column:
-    """P10 predicate: lowercase substring containment (search.go:228)."""
-    return F.instr(F.lower(col), query.lower()) > 0
+def _contains(ref: str, needle: str) -> str:
+    """P10: lowercase substring containment (search.go:228)."""
+    return f"instr(lower({ref}), {needle}) > 0"
 
 
-def score_expr(query: str, string_fields: list[str], map_fields: list[str] | None = None) -> Column:
-    """A3: additive score over matching fields, one column expression."""
+def match_sql(query: str, string_fields: list[str]) -> str:
+    """P10 over ``string_fields`` (column names or dotted struct paths):
+    TRUE when some field contains the query, case-insensitively. A row
+    whose fields are all NULL or non-matching is FALSE-or-NULL, which a
+    filter drops."""
+    needle = string_literal(query.lower())
+    return " OR ".join(_contains(column_ref(f), needle) for f in string_fields) or "false"
+
+
+def score_sql(query: str, string_fields: list[str], map_fields: list[str] | None = None) -> str:
+    """A3: additive score over matching fields, left to right."""
+    needle = string_literal(query.lower())
     parts = [
-        F.when(contains_ci(F.col(f), query), F.lit(field_weight(f))).otherwise(F.lit(0.0))
+        f"(CASE WHEN {_contains(column_ref(f), needle)} THEN {field_weight(f)!r}D ELSE 0.0D END)"
         for f in string_fields
     ]
     for mf in map_fields or []:
         # +3 per matching nested string value (search.go:245-253)
-        matched = F.filter(
-            F.map_values(F.col(mf)),
-            lambda v: F.instr(F.lower(v), query.lower()) > 0,
-        )
-        parts.append(F.size(matched).cast("double") * NESTED_MAP_WEIGHT)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out + p
-    return out
+        matched = f"filter(map_values({column_ref(mf)}), _v -> {_contains('_v', needle)})"
+        parts.append(f"(CAST(size({matched}) AS DOUBLE) * {NESTED_MAP_WEIGHT!r}D)")
+    return " + ".join(parts) or "0.0D"

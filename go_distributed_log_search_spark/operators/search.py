@@ -23,8 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scoring import contains_ci, score_expr
+from ..functions.scoring import match_sql, score_sql
 from ..plans.query_compiler import QueryCompiler
+from . import parse
 
 # transcript-turn string fields that participate in P10/A3
 DEFAULT_SEARCH_FIELDS = ["text", "level", "role", "tool", "op", "error_signature"]
@@ -42,33 +43,44 @@ def substring_search(
 
     limit semantics follow the reference: default 1 (args.go:215-216),
     limit == 0 returns nothing (search.go:45-47).
+
+    The predicate and the score are each one SQL expression, so building
+    the plan costs a few dozen driver round trips whatever the field
+    count; a Column-API chain costs about a dozen per operator.
     """
     if limit == 0:
         return df.limit(0).withColumn("score", F.lit(0.0))
     fields = string_fields or [c for c in DEFAULT_SEARCH_FIELDS if c in df.columns]
-    score = score_expr(query, fields, map_fields)
-    if not map_fields:
-        # filter on the equivalent short-circuiting OR of the P10
-        # predicates instead of `score > 0`: the pushed-down filter then
-        # stops at the first matching field (usually `text`, weight 10,
-        # no regex) instead of evaluating the FULL additive score a
-        # second time below the projection — the optimizer duplicates the
-        # whole score expression into the pushed filter otherwise
-        # (plans/r06/search_substring_topk_before.txt node (3) vs (5);
-        # guide §4.4's duplication pattern with builtins). Equivalent
-        # because every field weight is > 0: score > 0 iff some field
-        # matches iff the OR holds (NULL fields contribute 0 to the sum
-        # and FALSE-or-NULL to the OR — a row of only NULL/non-matching
-        # fields is dropped by both forms). Verified value-identical on
-        # sf0.1 and measured 0.235 -> 0.173 s (min-of-6) on the headline
-        # search. The map-field form keeps the score>0 filter: its
-        # exists()-style predicate would be an interpreted HOF.
-        scored = df.filter(match_predicate(fields, query)).withColumn(
-            "score", score
-        )
-    else:
-        scored = df.withColumn("score", score).filter(F.col("score") > 0)
-    order = [F.col("score").desc()] + [F.col(c) for c in tiebreak if c in df.columns]
+    maps = map_fields or []
+    # Columns parse_turns cut out of a searched column (level, op,
+    # error_signature, _dynamic out of text): each value is an ASCII run
+    # of that column, and lowercasing ASCII is character by character, so
+    # a query found in one is found in the column it came from. The
+    # filter can skip them — no regexp extraction on rows that fail it —
+    # and the full score still runs on the rows that pass.
+    implied = parse.substring_tagged(df.schema, fields)
+    scored = df
+    if all(m in implied for m in maps):
+        # filter on the short-circuiting OR of the P10 predicates instead
+        # of `score > 0`: the pushed-down filter then stops at the first
+        # matching field (usually `text`, weight 10) instead of evaluating
+        # the FULL additive score a second time below the projection (the
+        # optimizer duplicates the whole score expression into a pushed
+        # `score > 0`). Every weight is > 0 and a tagged field only
+        # matches where its source does, so the OR holds wherever
+        # score > 0 does (NULL fields add 0 to the sum and FALSE-or-NULL
+        # to the OR).
+        untagged = [f for f in fields if f not in implied]
+        scored = scored.filter(match_predicate(untagged, query))
+    scored = scored.withColumn("score", F.expr(score_sql(query, fields, maps)))
+    if maps:
+        # the score decides for rows with a NULL map, whose part of the
+        # score is NULL (or negative, under the legacy size-of-NULL rule)
+        # rather than 0. Untagged maps get no OR prefilter: its
+        # exists()-style map predicate would be an interpreted HOF on
+        # every row.
+        scored = scored.filter("score > 0")
+    order = [F.desc("score")] + [F.asc(c) for c in tiebreak if c in df.columns]
     return scored.orderBy(*order).limit(limit)
 
 
@@ -84,11 +96,9 @@ def field_query_search(
 
 
 def match_predicate(df_columns: list[str], query: str) -> Column:
-    """Bare P10 predicate over the given string columns (search.go:222-255)."""
-    cond = F.lit(False)
-    for c in df_columns:
-        cond = cond | contains_ci(F.col(c), query)
-    return cond
+    """Bare P10 predicate over the given string columns (search.go:222-255),
+    as one SQL expression."""
+    return F.expr(match_sql(query, df_columns))
 
 
 def bm25_topk(

@@ -98,10 +98,8 @@ def _cosine_scores_udf(spark, q_ids, q_mat, q_norms):
     # changes no semantics): without it the `size(..) > 0 AND isnotnull`
     # filter inferred from the downstream posexplode is substituted
     # through the projection and the scorer runs TWICE over the whole
-    # corpus — guide §4.4's duplicated-BatchEvalPython pattern, confirmed
-    # as two ArrowEvalPython nodes in the round-6 before-plan
-    # (plans/r06/knn_bruteforce_before.txt nodes 3+6). Fenced: ONE
-    # ArrowEvalPython (plans/r06/knn_bruteforce_after.txt).
+    # corpus — guide §4.4's duplicated-BatchEvalPython pattern: two
+    # ArrowEvalPython nodes in the unfenced physical plan, ONE fenced.
     return cos_scores.asNondeterministic()
 
 

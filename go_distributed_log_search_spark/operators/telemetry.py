@@ -79,10 +79,11 @@ def top_talkers(
     leave each partition's aggregate.
     """
     from ..functions import grok
+    from ..functions.sqltext import column_ref
 
     rows = turns.select(
         F.regexp_extract(F.col(text_col), SRC_IP_RE, 1).alias("src_ip"),
-        grok.kv_long_expr(F.col(text_col), "bytes").alias("bytes"),
+        F.expr(grok.kv_long_sql(column_ref(text_col), "bytes")).alias("bytes"),
     ).filter(F.col("src_ip") != "")
     return (
         rows.groupBy("src_ip")

@@ -113,7 +113,7 @@ def q_dynamic_fields(spark, sf_dir):
     """P1 leftover -> _dynamic: per-conv count of unclaimed kv OCCURRENCES
     (duplicate keys counted; F.size(_dynamic) would dedup — ADVICE r01)."""
     parsed = parse.parse_turns(_t(spark, sf_dir), dynamic=True)
-    n_dyn = parse.unclaimed_kv_count_expr(F.col("text"))
+    n_dyn = parse.unclaimed_kv_count_expr("text")
     counted = parsed.select("conv_id", n_dyn.alias("_n_dyn"))
     return counted.groupBy("conv_id").agg(
         F.sum("_n_dyn").alias("dynamic_kv_total"),

@@ -151,14 +151,18 @@ class Warehouse:
 
     def compact(self, table: str, target_partitions: int = 4) -> None:
         """U1 merge analog (merge.go:24-85): read-repartition-rewrite.
-        Iceberg's rewrite_data_files equivalent. Swap order keeps the table
-        recoverable at every step (ADVICE r01): write tmp -> rename live
-        aside -> rename tmp live -> delete old. A crash between the two
-        renames leaves no live directory but BOTH copies intact on disk
-        (".compact.old" is the pre-compact table, ".compact.tmp" the full
-        rewrite) — unlike rmtree-then-rename, which had a window where the
-        only copy was gone. True single-metadata-op atomicity is what the
-        Iceberg snapshot swap provides in production."""
+        Iceberg's rewrite_data_files equivalent. The rewrite keeps the
+        ``batch_id=`` partition layout, one file per batch (each batch
+        hashes to one of ``target_partitions`` write tasks): a later
+        ``append_batch`` then adds a partition beside the compacted ones,
+        and ``read_as_of`` / ``read_between`` still prune by directory.
+        Swap order keeps the table recoverable at every step: write tmp ->
+        rename live aside -> rename tmp live -> delete old. A crash between
+        the two renames leaves no live directory but BOTH copies intact on
+        disk (".compact.old" is the pre-compact table, ".compact.tmp" the
+        full rewrite) — unlike rmtree-then-rename, which had a window where
+        the only copy was gone. True single-metadata-op atomicity is what
+        the Iceberg snapshot swap provides in production."""
         src = self.path(table)
         tmp = src + ".compact.tmp"
         old = src + ".compact.old"
@@ -166,7 +170,12 @@ class Warehouse:
         # file's schema and the rewrite would permanently drop columns
         # that only later batches carry.
         df = self.spark.read.option("mergeSchema", "true").parquet(src)
-        df.repartition(target_partitions).write.mode("overwrite").parquet(tmp)
+        (
+            df.repartition(target_partitions, "batch_id")
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .parquet(tmp)
+        )
         shutil.rmtree(old, ignore_errors=True)
         os.replace(src, old)
         os.replace(tmp, src)

@@ -19,9 +19,10 @@ Spark restatement, one of each:
 - one quarantine rule: ``_corrupt`` is true exactly when a line is not
   exactly one JSON object — malformed, a non-object value, or an object
   followed by anything but whitespace (``{"a":1} x``, ``{"a":1} {"b":2}``,
-  ``{"a":1},{"b":2}``). Spark's JSON reader stops after the first value
-  on a line, so the line is parsed wrapped in ``[...]``, where trailing
-  content is a syntax error or a second element. The reference errors
+  ``{"a":1},{"b":2}``, ``{"a":1}] {}``). Spark's JSON reader stops after
+  the first value on a line, so the line is parsed wrapped in ``[...]``
+  and in ``{"_":...}``: trailing content is a syntax error or a second
+  element in at least one of the two. The reference errors
   the whole run on one bad line; at 100 TB that is not an option, so the
   engine flags the line instead — documented deviation.
 """
@@ -89,19 +90,23 @@ def read_jsonl_indexed(
         # PERMISSIVE (the default): a malformed line parses to all NULLs,
         # a mistyped field to a NULL field
         F.from_json("value", struct).alias("d"),
-        # second parse of the same line, wrapped as a JSON array of
-        # map<string,string>: its one element is the raw string form of
-        # every top-level key — the leftover pool for ``_dynamic`` AND the
-        # input to the per-field string parsers (one extra from_json over
-        # the already-in-memory line; both evaluate inside the same
-        # codegen stage). The wrapping is what catches trailing content.
+        # the line parsed again inside the object wrapper {"_": line}: its
+        # one member is the raw string form of every top-level key — the
+        # leftover pool for ``_dynamic`` AND the input to the per-field
+        # string parsers. Spark stops reading after the first JSON value,
+        # so content after the line's object is caught only where it
+        # breaks a wrapper: ``]`` breaks this one, while ``}`` or
+        # ``,"k":v`` breaks the array wrapper [line] (or gives it a second
+        # element), which is only counted, not decoded. All three run in
+        # the same codegen stage.
         F.from_json(
-            F.concat(F.lit("["), "value", F.lit("]")), "array<map<string,string>>"
-        ).alias("_objs"),
+            F.concat(F.lit('{"_":'), "value", F.lit("}")), "struct<_: map<string,string>>"
+        ).alias("_wrapped"),
+        F.json_array_length(F.concat(F.lit("["), "value", F.lit("]"))).alias("_n"),
         *passthrough,
     ).select(
         "d",
-        F.when(F.size("_objs") == 1, F.get("_objs", 0)).alias("_all"),
+        F.when(F.col("_n") == 1, F.col("_wrapped._")).alias("_all"),
         *passthrough,
     )
     out = parsed.select(

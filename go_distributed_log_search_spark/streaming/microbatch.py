@@ -66,6 +66,8 @@ def commit_batch(
     # re-deriving the routed frame per table would re-parse the batch.
     # conv_id's metadata is dropped first: it holds the SOURCE table's hot
     # keys (transcripts_df), and parquet would store them as the sink's.
+    # parse's lineage tags stay: the sink stores text with the columns cut
+    # out of it, so they hold for the stored rows too.
     routed = route.routed(enriched).withMetadata("conv_id", {}).persist()
     try:
         # 1. data commits (S5)

@@ -8,6 +8,7 @@ import json
 import pytest
 
 from go_distributed_log_search_spark import cli, demo
+from go_distributed_log_search_spark.sources.catalog import Warehouse
 
 
 @pytest.fixture(scope="module")
@@ -101,3 +102,34 @@ def test_drop(spark, wh_dir):
 def test_index_unknown_name_errors(spark, wh_dir):
     with pytest.raises(SystemExit, match="does not exist"):
         run(spark, wh_dir, "index", "nope", demo.FIXTURE_JSONL)
+
+
+def test_index_after_merge_keeps_every_batch(spark, tmp_path, capsys):
+    """index, index, merge, index: every batch stays readable, and the
+    snapshot and incremental reads of each commit return the same rows
+    before and after the merge."""
+    wh_dir = str(tmp_path)
+    assert run(spark, wh_dir, "create", demo.FIXTURE_YAML) == 0
+    for _ in range(2):
+        assert run(spark, wh_dir, "index", "hdfs-logs", demo.FIXTURE_JSONL) == 0
+    wh = Warehouse(spark, wh_dir)
+    b0, b1 = wh.commit_order()
+
+    def rows(df):
+        return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+                      for r in df.collect())
+
+    def snapshots():
+        return [rows(wh.read_as_of("hdfs-logs", b)) for b in (b0, b1)] + [
+            rows(wh.read_between("hdfs-logs", None, b0)),
+            rows(wh.read_between("hdfs-logs", b0, b1)),
+        ]
+
+    before = snapshots()
+    assert [len(r) for r in before] == [13, 26, 13, 13]
+    assert run(spark, wh_dir, "merge", "hdfs-logs", "--target-partitions", "2") == 0
+    assert snapshots() == before
+    assert run(spark, wh_dir, "index", "hdfs-logs", demo.FIXTURE_JSONL) == 0
+    assert wh.read("hdfs-logs").count() == 39
+    assert snapshots() == before
+    capsys.readouterr()

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_distributed_log_search_spark import pipeline
-from go_distributed_log_search_spark.operators import aggregate, route
+from go_distributed_log_search_spark.operators import aggregate, parse, route
 from go_distributed_log_search_spark.sources.catalog import Warehouse
 from go_distributed_log_search_spark.streaming import microbatch, structured
 from go_distributed_log_search_spark.transcripts import transcripts_df
@@ -94,3 +94,18 @@ def test_tables_do_not_inherit_source_stats(spark, warehouses):
     for name, wh, _ in warehouses:
         for table in TABLES.values():
             assert wh.read(table).schema["conv_id"].metadata == {}, (name, table)
+
+
+def test_sink_tables_keep_parse_lineage_tags(warehouses):
+    """The sink tables store text together with the columns parse cut out
+    of it, so they keep parse's lineage tags (text's token pairs with each
+    tag), and a search over a sink table skips those columns in its
+    filter. agg_terms has no text and no tags."""
+    for name, wh, _ in warehouses:
+        for sink in route.SINKS:
+            df = wh.read(f"sink_{sink}")
+            tagged = parse.substring_tagged(df.schema, ["text"])
+            assert tagged == {"level", "error_signature", "tool_call", "bytes",
+                              "op", "duration", "_dynamic"}, (name, sink)
+        agg = wh.read("agg_terms")
+        assert not any(f.metadata for f in agg.schema.fields), name

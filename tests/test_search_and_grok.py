@@ -60,15 +60,14 @@ def test_grok_udf_matches_catalyst(spark):
 def test_grok_kv_key_must_be_plain_word(spark):
     """The ``key: `` prefix offset is len(key) + 2 only when the key
     matches itself literally, so any other key is refused."""
-    text = F.col("text")
     for key in ("a.b", "x+", "(k)", "a b", ""):
         with pytest.raises(ValueError):
-            grok.kv_long_expr(text, key)
+            grok.kv_long_sql("text", key)
         with pytest.raises(ValueError):
-            grok.kv_str_expr(text, key)
+            grok.kv_str_sql("text", key)
     row = (
         spark.createDataFrame([("op: read bytes: 42",)], "text string")
-        .select(grok.kv_str_expr(text, "op"), grok.kv_long_expr(text, "bytes"))
+        .selectExpr(grok.kv_str_sql("text", "op"), grok.kv_long_sql("text", "bytes"))
         .first()
     )
     assert tuple(row) == ("read", 42)
@@ -146,3 +145,111 @@ def test_trending_terms_tiebreak_and_limit(spark):
     , key=lambda x: x[2])
     # a/b/d all have cnt 2 -> term-asc tiebreak; c (cnt 1) is cut at 3
     assert ten == [("a", 2, 1), ("b", 2, 2), ("d", 2, 3)]
+
+
+# the benchmark's six queries (broad, medium, narrow), then edge cases:
+# tag fragments, regex and LIKE metacharacters, quotes, non-ASCII, empty
+TAG_QUERIES = [
+    "stream", "window", "error", "hdfs_read", "tombstone", "quorum",
+    "level", "=", "err", "ERROR", "op: ", "9000", "'", "\\", "%", "_", "ü",
+    "", '""',
+]
+TAGGED = {"level", "error_signature", "tool_call", "bytes", "op", "duration"}
+
+
+def _untagged(df):
+    for name in TAGGED | {"_dynamic", "text"}:
+        if name in df.columns:
+            df = df.withMetadata(name, {})
+    return df
+
+
+def _hits(df, q, **kw):
+    return [tuple(r) for r in search.substring_search(df, q, **kw)
+            .select("conv_id", "turn_idx", "score").collect()]
+
+
+def test_tags_mark_parse_columns_as_substrings_of_text(parsed):
+    fields = search.DEFAULT_SEARCH_FIELDS
+    assert parse.substring_tagged(parsed.schema, fields) == TAGGED
+    # the source column itself must be searched for a tag to count
+    assert parse.substring_tagged(parsed.schema, ["level", "op"]) == set()
+    assert parse.substring_tagged(_untagged(parsed).schema, fields) == set()
+
+
+def test_tagged_search_equals_full_predicate(spark, parsed):
+    """Skipping the tagged columns in the filter returns exactly the rows
+    and scores of the full P10 predicate, for every query, with a limit
+    that covers every match."""
+    plain = _untagged(parsed)
+    n = parsed.count()
+    for q in TAG_QUERIES:
+        assert _hits(parsed, q, limit=n) == _hits(plain, q, limit=n), q
+    # the map-scoring form: _dynamic is tagged too
+    dyn = parse.parse_turns(transcripts_df(spark, SF0001), dynamic=True)
+    assert "_dynamic" in parse.substring_tagged(dyn.schema, ["text"])
+    kw = dict(limit=n, string_fields=["text"], map_fields=["_dynamic"])
+    for q in ("9000", "src", "hdfs", "/10.10.", "error", ""):
+        assert _hits(dyn, q, **kw) == _hits(_untagged(dyn), q, **kw), q
+
+
+def test_replaced_text_voids_tags(parsed):
+    """A text column replaced after parsing no longer holds the tagged
+    values, so search falls back to the full predicate: rows found only
+    through level still come back."""
+    replaced = parsed.withColumn("text", F.lit("nothing here"))
+    assert parse.substring_tagged(replaced.schema, search.DEFAULT_SEARCH_FIELDS) == set()
+    n = parsed.count()
+    got = _hits(replaced, "error", limit=n)
+    expected = sorted(
+        ((r.conv_id, r.turn_idx, 8.0 + (2.0 if "error" in r.error_signature.lower() else 0.0))
+         for r in parsed.filter(F.col("level") == "ERROR").collect()),
+        key=lambda t: (-t[2], t[0], t[1]),
+    )
+    assert expected and got == expected
+
+
+def _filters(df) -> list[str]:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in plan.splitlines() if "Filter " in ln]
+
+
+def test_tagged_filter_runs_no_regexp(spark):
+    # an input no cached frame shares a plan with: where the cached fixture
+    # stands in, level is a stored column, not an extraction
+    turns = spark.createDataFrame(
+        [("c", 0, "assistant", None, None, "level=ERROR sig=AuthFailure x")],
+        "conv_id string, turn_idx int, role string, tool string, ts timestamp, text string",
+    )
+    parsed = parse.parse_turns(turns, dynamic=False)
+    filters = _filters(search.substring_search(parsed, "error", limit=10))
+    assert filters and not any("regexp" in f for f in filters), filters
+    # without the tags the filter extracts level, op and error_signature
+    plain = _filters(search.substring_search(_untagged(parsed), "error", limit=10))
+    assert any("regexp" in f for f in plain), plain
+
+
+def test_plan_build_driver_round_trips(spark):
+    """Building the parse projection and a search plan takes a few dozen
+    py4j calls from the driver, not the hundreds a Column-API chain makes
+    (each Column-API call is one or more round trips)."""
+    client = spark.sparkContext._gateway._gateway_client
+    base = transcripts_df(spark, SF0001)
+    calls = []
+    send = client.send_command
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        parsed = parse.parse_turns(base)
+        n_parse = len(calls)
+        calls.clear()
+        search.substring_search(parsed, "error", limit=100)
+        n_search = len(calls)
+    finally:
+        del client.send_command
+    assert n_parse <= 40, n_parse
+    assert n_search <= 40, n_search

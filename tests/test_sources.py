@@ -118,6 +118,15 @@ def test_quarantine_is_exactly_one_object(spark):
     assert {r.line: (r.a, r.b, r._dynamic) for r in rows if not r._corrupt} == clean
 
 
+def test_quarantine_catches_content_closing_the_wrapper(spark):
+    """Content after the object that starts with ``]`` would close an
+    array wrapper early; the line is still not one JSON object."""
+    flagged = ['{"a":1}]', '{"a":1}] x', '{"a":1}] {}', '{"a":1}}', '{"a":1},"b":"y"']
+    lines = spark.createDataFrame([(ln, ln) for ln in flagged], "value string, line string")
+    rows = jsonl.read_jsonl_indexed(lines, SCHEMA).collect()
+    assert sorted(r.line for r in rows if r._corrupt) == sorted(flagged)
+
+
 def test_read_stdin(spark, monkeypatch):
     monkeypatch.setattr(
         "sys.stdin",
