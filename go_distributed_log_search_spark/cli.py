@@ -12,20 +12,20 @@ src/args/args.go:241-261). This module reproduces that surface:
 
 with ``--warehouse DIR`` (default ./spark-warehouse) standing in for the
 reference's ``--db`` catalog + object-storage pair. The catalog row for an
-index is its stored YAML config (create.go:49-53); ``index`` reads its
+index is its YAML config in ``_catalog.sqlite`` (create.go:49-53), and its
+commits are lineage rows keyed by the index name; ``index`` reads its
 input through the one source dispatch and runs the schema-driven S1+P1
 decode (unclaimed keys -> ``_dynamic``); ``search``
 runs the P10 substring predicate + A3 additive scorer with true top-k and
 re-expands ``_dynamic`` into the output JSON (P9, search.go:318-326);
 ``merge`` is the read-repartition-rewrite compaction (merge.go:24-85);
-``drop`` removes data + catalog entry (drop.go:15-87).
+``drop`` removes the catalog rows, then the data (drop.go:15-87).
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import uuid
 
@@ -38,16 +38,11 @@ from .sources.catalog import Warehouse
 from .sources.jsonl import connect_to_source, read_jsonl_indexed
 
 
-def _schema_path(wh: Warehouse, name: str) -> str:
-    return os.path.join(wh.root, f"{name}.config.yaml")
-
-
 def _load_index_schema(wh: Warehouse, name: str) -> IndexSchema:
-    p = _schema_path(wh, name)
-    if not os.path.exists(p):
-        raise SystemExit(f"index '{name}' does not exist (no {p}); run `create` first")
-    with open(p) as f:
-        return load_schema(f.read())
+    config = wh.index_config(name)
+    if config is None:
+        raise SystemExit(f"index '{name}' does not exist; run `create` first")
+    return load_schema(config)
 
 
 def cmd_create(spark: SparkSession, wh: Warehouse, args) -> int:
@@ -56,8 +51,7 @@ def cmd_create(spark: SparkSession, wh: Warehouse, args) -> int:
     with open(args.config) as f:
         text = f.read()
     schema = load_schema(text)  # validates (e.g. array-of-object rejection)
-    with open(_schema_path(wh, schema.name), "w") as f:
-        f.write(text)
+    wh.save_index(schema.name, text)
     print(f"created index '{schema.name}' ({len(schema.fields)} fields)")
     return 0
 
@@ -112,9 +106,10 @@ def cmd_search(spark: SparkSession, wh: Warehouse, args) -> int:
 
 def cmd_merge(spark: SparkSession, wh: Warehouse, args) -> int:
     del spark
+    _load_index_schema(wh, args.name)
     if not wh.exists(args.name):
         raise SystemExit(f"index '{args.name}' has no data to merge")
-    wh.compact(args.name, target_partitions=args.target_partitions)
+    wh.compact(args.name)
     print(f"merged '{args.name}' to one file per batch")
     return 0
 
@@ -122,9 +117,6 @@ def cmd_merge(spark: SparkSession, wh: Warehouse, args) -> int:
 def cmd_drop(spark: SparkSession, wh: Warehouse, args) -> int:
     del spark
     wh.drop(args.name)
-    p = _schema_path(wh, args.name)
-    if os.path.exists(p):
-        os.remove(p)
     print(f"dropped '{args.name}'")
     return 0
 
@@ -156,7 +148,6 @@ def build_parser() -> argparse.ArgumentParser:
 
     p = sub.add_parser("merge", help="compact an index's data files")
     p.add_argument("name")
-    p.add_argument("--target-partitions", type=int, default=4)
     p.set_defaults(fn=cmd_merge)
 
     p = sub.add_parser("drop", help="drop an index (data + catalog entry)")

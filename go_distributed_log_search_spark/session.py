@@ -1,8 +1,9 @@
 """SparkSession factory tuned for this sandbox and for scale.
 
-The sandbox is one JVM with 32 threads (local[32], 128 GiB); production is a
-multi-executor cluster reading 100 TB+. Every knob below is chosen so the
-same plan shape survives the scale-up:
+Locally the session is one JVM with ``SPARK_GRAFT_CPUS`` task threads
+(``local[N]``, default 32); production is a multi-executor cluster reading
+100 TB+. Every knob below is chosen so the same plan shape survives the
+scale-up:
 
 - AQE off: every hot-path exchange carries an explicit partition count, so
   locally AQE only adds re-planning pauses. A production session reading
@@ -167,12 +168,13 @@ def get_spark(
         .config("spark.memory.offHeap.enabled", "true")
         .config("spark.memory.offHeap.size", "6g")
         # local small-SF tuning: split packing at the default 128MB/4MB
-        # open-cost folds a 64-file table into a handful of splits, capping
+        # open-cost folds the cached table into a handful of splits, capping
         # map-stage parallelism far below the core count (the map stages
         # here are compute-bound: regex parse + tokenize explode + partial
-        # agg). 4m/4m makes every ~1MB cache file its own split -> split
-        # count == file count == 64 == 2 waves on 32 cores. Production
-        # (100 TB) keeps the 128MB default — splits are abundant there.
+        # agg). 4m/4m makes every small cache file its own split -> split
+        # count == file count == SPARK_GRAFT_CPUS (transcripts.py) == one
+        # wave. Production (100 TB) keeps the 128MB default — splits are
+        # abundant there.
         .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "4m")
         # this sandbox runs under gVisor: file syscalls are expensive and

@@ -1,4 +1,4 @@
-"""Warehouse catalog — sink tables, lineage, checkpoints.
+"""Warehouse catalog — data tables, lineage, checkpoints, index configs.
 
 Reference analog: the SQL metadata store (sqlite_schema.sql:2-22 —
 ``indexes``, ``index_files``, ``kafka_checkpoints`` tables behind a
@@ -8,23 +8,24 @@ DBAdapter, src/database/adapter.go:12-17) plus the object-storage Operator
 Production design is Iceberg: each sink is an Iceberg table, lineage rows
 ride the snapshot metadata, and commits are atomic snapshot swaps. This
 sandbox has no Iceberg runtime jar, so the stand-in is a parquet warehouse
-for the data plus a driver-side SQLite catalog for the control plane, with
-the SAME interface and the same commit discipline:
+for the data plus a driver-side SQLite catalog, ``{root}/_catalog.sqlite``,
+the one place that names a table and says whether it exists. Each catalog
+write is one transaction on the driver, not a Spark job:
 
 - every batch writes under ``{table}/batch_id={id}/`` via dynamic partition
   overwrite -> re-running a failed batch REPLACES its own partition
   (idempotent at-least-once, the reference's file-then-checkpoint ordering,
   index.go:258-274, made crash-safe);
-- ``lineage`` rows (batch_id, sink, row_count) are written AFTER the data
-  commit (A2/doc_count analog, mod.go:362-365);
-- ``checkpoints`` rows (source_id, part_id, watermark) are upserted LAST,
-  keeping the highest watermark (kafka_checkpoint.go:124-127 upsert;
-  +1-resume semantics kafka_source.go:252-256).
-
-Lineage and checkpoints live in ``{root}/_catalog.sqlite``, the analog of
-the reference's SQL store: each write is one transaction on the driver, not
-a Spark job, and the keys (batch_id, sink) and (source_id, part_id) make a
-re-run replace its own rows, as the data partitions are replaced.
+- ``lineage`` rows (batch_id, sink, row_count), keyed by (batch_id, sink),
+  are written AFTER the data commit (A2/doc_count analog, mod.go:362-365).
+  ``sink`` is the name of the table (and directory) the row counts, and a
+  table exists when some commit recorded rows for it;
+- ``checkpoints`` rows (source_id, part_id, watermark), keyed by
+  (source_id, part_id), are upserted LAST, keeping the highest watermark
+  (kafka_checkpoint.go:124-127 upsert; +1-resume kafka_source.go:252-256);
+- ``indexes(name, config)`` holds each CLI index's YAML config
+  (create.go:49-53). Dropping a table deletes its lineage rows and its
+  ``indexes`` row in one transaction, then its data (drop.go:15-87).
 """
 
 from __future__ import annotations
@@ -43,27 +44,33 @@ CREATE TABLE IF NOT EXISTS lineage (batch_id TEXT NOT NULL, sink TEXT NOT NULL,
   row_count INTEGER NOT NULL, committed_at REAL NOT NULL, PRIMARY KEY (batch_id, sink));
 CREATE TABLE IF NOT EXISTS checkpoints (source_id TEXT NOT NULL, part_id INTEGER NOT NULL,
   watermark INTEGER NOT NULL, batch_id TEXT NOT NULL, PRIMARY KEY (source_id, part_id));
+CREATE TABLE IF NOT EXISTS indexes (name TEXT PRIMARY KEY, config TEXT NOT NULL);
 """
 
 
 class Warehouse:
     """Parquet data tables with Iceberg-style batch-partition commits, and
-    a SQLite catalog of lineage and checkpoints beside them."""
+    a SQLite catalog of lineage, checkpoints and index configs beside them."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         os.makedirs(root, exist_ok=True)
         self.catalog_path = os.path.join(root, "_catalog.sqlite")
-        with contextlib.closing(sqlite3.connect(self.catalog_path)) as con:
+        with self._transaction() as con:
             con.executescript(CATALOG_DDL)
 
-    def _sql(self, sql: str, params=(), many: bool = False) -> list[tuple]:
-        """One statement as one catalog transaction (commit on success,
-        rollback on error) on a connection of its own: foreachBatch commits
-        from a Py4J callback thread, and a sqlite3 connection must stay on
-        the thread that opened it. ``many`` runs it once per params row."""
+    @contextlib.contextmanager
+    def _transaction(self):
+        """One transaction on a connection of its own: foreachBatch commits
+        from a Py4J callback thread, and a connection must stay on its
+        thread."""
         with contextlib.closing(sqlite3.connect(self.catalog_path)) as con, con:
+            yield con
+
+    def _sql(self, sql: str, params=(), many: bool = False) -> list[tuple]:
+        """One statement, once per params row if ``many``, as a transaction."""
+        with self._transaction() as con:
             return (con.executemany if many else con.execute)(sql, params).fetchall()
 
     # ---------------------------------------------------------- tables
@@ -72,11 +79,9 @@ class Warehouse:
         return os.path.join(self.root, table)
 
     def exists(self, table: str) -> bool:
-        p = self.path(table)
-        return os.path.isdir(p) and any(
-            f.startswith("batch_id=") or f.endswith(".parquet") or f == "_SUCCESS"
-            for f in os.listdir(p)
-        )
+        """Whether some commit recorded rows for ``table``."""
+        sql = "SELECT 1 FROM lineage WHERE sink = ? AND row_count > 0 LIMIT 1"
+        return bool(self._sql(sql, (table,)))
 
     def read(self, table: str) -> DataFrame:
         """Schema-evolving read: batches may add fields over time (a field
@@ -121,57 +126,49 @@ class Warehouse:
         so the scan prunes to the snapshot's directories and never reads
         later commits (Iceberg's snapshot read resolved from metadata; the
         listing here is the parquet stand-in)."""
-        order = self.commit_order()
-        if batch_id not in order:
-            raise ValueError(f"unknown commit {batch_id!r}; committed: {order}")
-        keep = order[: order.index(batch_id) + 1]
-        return self.read(table).filter(F.col("batch_id").isin(keep))
+        return self.read_between(table, None, batch_id)
 
     def read_between(self, table: str, after: str | None, until: str) -> DataFrame:
         """Incremental (CDC-style) read: rows appended by commits in
         (``after``, ``until``] — the consume-new-data half of streaming
-        backfill. ``after=None`` means from the beginning. Same partition
-        pruning as read_as_of."""
+        backfill. ``after=None`` means from the beginning. A commit the
+        lineage does not hold (never made, or dropped) raises ValueError.
+        Same partition pruning as read_as_of."""
         order = self.commit_order()
+        unknown = {after, until} - {None} - set(order)
+        if unknown:
+            raise ValueError(f"unknown commit {sorted(unknown)}; committed: {order}")
         lo = 0 if after is None else order.index(after) + 1
-        hi = order.index(until) + 1
-        keep = order[lo:hi]
-        if not keep:
-            return self.read(table).filter(F.lit(False))
+        keep = order[lo : order.index(until) + 1]
         return self.read(table).filter(F.col("batch_id").isin(keep))
 
     def drop(self, table: str) -> None:
-        """U2 drop-index analog (drop.go:15-87): remove data files; the
-        'catalog row' here is the directory itself. ``lineage`` and
-        ``checkpoints`` are catalog tables: dropping one empties it."""
+        """U2 drop-index analog (drop.go:15-87): the table's lineage rows
+        and its ``indexes`` row go in one transaction, then its data.
+        ``lineage`` and ``checkpoints`` are catalog tables: dropping one
+        empties it."""
         if table in ("lineage", "checkpoints"):
             self._sql(f"DELETE FROM {table}")
-        else:
-            shutil.rmtree(self.path(table), ignore_errors=True)
+            return
+        with self._transaction() as con:
+            con.execute("DELETE FROM lineage WHERE sink = ?", (table,))
+            con.execute("DELETE FROM indexes WHERE name = ?", (table,))
+        shutil.rmtree(self.path(table), ignore_errors=True)
 
-    def compact(self, table: str, target_partitions: int = 4) -> None:
-        """U1 merge analog (merge.go:24-85): read-repartition-rewrite.
-        Iceberg's rewrite_data_files equivalent. The rewrite keeps the
-        ``batch_id=`` partition layout, one file per batch (each batch
-        hashes to one of ``target_partitions`` write tasks): a later
-        ``append_batch`` then adds a partition beside the compacted ones,
-        and ``read_as_of`` / ``read_between`` still prune by directory.
-        Swap order keeps the table recoverable at every step: write tmp ->
-        rename live aside -> rename tmp live -> delete old. A crash between
-        the two renames leaves no live directory but BOTH copies intact on
-        disk (".compact.old" is the pre-compact table, ".compact.tmp" the
-        full rewrite) — unlike rmtree-then-rename, which had a window where
-        the only copy was gone. True single-metadata-op atomicity is what
-        the Iceberg snapshot swap provides in production."""
+    def compact(self, table: str) -> None:
+        """U1 merge analog (merge.go:24-85), Iceberg's rewrite_data_files:
+        rewrite the table (its merged schema, so no late column is lost)
+        keeping one ``batch_id=`` partition and file per batch, so later
+        appends and ``read_as_of`` / ``read_between`` work as before. Swap
+        order: write tmp -> rename live aside -> rename tmp live -> delete
+        old. A crash between the renames leaves both whole copies on disk
+        (".compact.old", ".compact.tmp"); single-metadata-op atomicity is
+        the Iceberg snapshot swap's in production."""
         src = self.path(table)
         tmp = src + ".compact.tmp"
         old = src + ".compact.old"
-        # mergeSchema here is load-bearing: a plain read would pick ONE
-        # file's schema and the rewrite would permanently drop columns
-        # that only later batches carry.
-        df = self.spark.read.option("mergeSchema", "true").parquet(src)
         (
-            df.repartition(target_partitions, "batch_id")
+            self.read(table).repartition("batch_id")
             .write.mode("overwrite")
             .partitionBy("batch_id")
             .parquet(tmp)
@@ -180,6 +177,17 @@ class Warehouse:
         os.replace(src, old)
         os.replace(tmp, src)
         shutil.rmtree(old)
+
+    # ------------------------------------------------------- index configs
+
+    def save_index(self, name: str, config: str) -> None:
+        """Register (or replace) an index's YAML config."""
+        self._sql("INSERT OR REPLACE INTO indexes VALUES (?, ?)", (name, config))
+
+    def index_config(self, name: str) -> str | None:
+        """An index's YAML config, or None when no index has that name."""
+        rows = self._sql("SELECT config FROM indexes WHERE name = ?", (name,))
+        return rows[0][0] if rows else None
 
     # ------------------------------------------------ lineage / checkpoints
 

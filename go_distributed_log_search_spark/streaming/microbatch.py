@@ -40,11 +40,9 @@ def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn("part_id", F.pmod(F.hash("conv_id"), F.lit(n_parts)).cast("int"))
 
 
-def pending_partitions(
-    wh: Warehouse, all_parts: list[int], source_id: str = SOURCE_ID
-) -> list[int]:
+def pending_partitions(wh: Warehouse, all_parts: list[int]) -> list[int]:
     """ST4: anti-join the partition list against stored checkpoints."""
-    done = wh.load_checkpoints(source_id)
+    done = wh.load_checkpoints(SOURCE_ID)
     return [p for p in all_parts if p not in done]
 
 
@@ -58,8 +56,9 @@ def commit_batch(
     Parses and enriches the batch, persists the routed frame once, appends
     each ``sink_<name>`` table plus ``agg_terms`` under ``batch_id``, then
     records one lineage row per table with the row counts each write job
-    observed. Returns those counts, keyed by sink name (``errors``, ...)
-    and ``agg_terms`` as the lineage rows are.
+    observed. Returns those counts keyed by table name, as the lineage rows
+    are: ``sink_errors``, ``sink_tool_calls``, ``sink_assistant_turns`` and
+    ``agg_terms``.
     """
     enriched = enrich.enrich_turns(parse.parse_turns(batch_df), spark)
     # persisted: each append is a separate job over full rows, and
@@ -74,10 +73,12 @@ def commit_batch(
         counts: dict[str, int] = {}
         for sink in route.SINKS:
             sink_df = routed.filter(F.col("sink") == sink).drop("sink")
-            counts[sink] = wh.append_batch(sink_df, f"sink_{sink}", batch_id)
-        # hot_keys=None: a batch is a bounded slice — partial agg absorbs
-        # its skew; per-batch hot-key detection would add a count job per
-        # batch for nothing
+            table = f"sink_{sink}"
+            counts[table] = wh.append_batch(sink_df, table, batch_id)
+        # hot_keys=None saves a detection job per batch. Partial agg does
+        # not absorb a hot conversation here: the cold branch repartitions
+        # by conv_id before the explode, so each one aggregates on a single
+        # reducer. Sizing the commit for that skew is open (ROADMAP.md).
         aggs = aggregate.term_counts(routed, hot_keys=None)
         counts["agg_terms"] = wh.append_batch(aggs, "agg_terms", batch_id)
         # 2. lineage AFTER all data commits (A2, mod.go:362-365), one
@@ -94,7 +95,6 @@ def run_microbatch_ingest(
     wh: Warehouse,
     n_parts: int = 8,
     parts_per_batch: int = 4,
-    source_id: str = SOURCE_ID,
     fail_after_batches: int | None = None,
 ) -> list[str]:
     """Drive the full parse->enrich->route->aggregate flow in micro-batches.
@@ -104,7 +104,7 @@ def run_microbatch_ingest(
     Returns the committed batch_ids.
     """
     tagged_input = with_part_id(transcripts, n_parts)
-    todo = pending_partitions(wh, list(range(n_parts)), source_id)
+    todo = pending_partitions(wh, list(range(n_parts)))
     committed: list[str] = []
     batch_no = 0
     while todo:
@@ -115,7 +115,7 @@ def run_microbatch_ingest(
         # deterministic batch_id so a re-run after crash reuses the same
         # sink partition (idempotency); reference uses a fresh UUID
         # (index.go:87) because its duplicates are tolerated
-        batch_id = f"{source_id}-p{min(batch_parts)}-{max(batch_parts)}"
+        batch_id = f"{SOURCE_ID}-p{min(batch_parts)}-{max(batch_parts)}"
         batch = tagged_input.filter(F.col("part_id").isin([int(p) for p in batch_parts]))
         # each partition's watermark (max turn_idx + 1) is observed on the
         # commit's own scan of the raw batch, not counted by a job of its own
@@ -132,7 +132,7 @@ def run_microbatch_ingest(
         # advances)
         marks = seen.get
         wh.save_checkpoint(
-            source_id, [(p, marks[str(p)] or 0) for p in batch_parts], batch_id
+            SOURCE_ID, [(p, marks[str(p)] or 0) for p in batch_parts], batch_id
         )
         committed.append(batch_id)
         batch_no += 1

@@ -42,7 +42,7 @@ def test_cold_run_commits_everything(spark, transcripts, tmp_path):
         wh.lineage().filter(F.col("sink") != "agg_terms")
         .groupBy("sink").agg(F.sum("row_count").alias("n")).collect()
     )
-    assert {r.sink: r.n for r in lineage} == direct
+    assert {r.sink: r.n for r in lineage} == {f"sink_{s}": n for s, n in direct.items()}
     # agg_terms lineage is the real row count of each batch's partition
     agg_rows = {
         r.batch_id: r["count"]
@@ -88,7 +88,7 @@ def test_rerun_batch_is_idempotent(spark, transcripts, tmp_path):
     )
     assert _sink_state(wh) == before
     lineage = wh.lineage().collect()
-    tables = [*route.SINKS, "agg_terms"]
+    tables = [*(f"sink_{s}" for s in route.SINKS), "agg_terms"]
     assert sorted((r.batch_id, r.sink) for r in lineage) == sorted(
         (b, t) for b in batches for t in tables
     )
@@ -96,7 +96,7 @@ def test_rerun_batch_is_idempotent(spark, transcripts, tmp_path):
     for r in lineage:
         summed[r.sink] = summed.get(r.sink, 0) + r.row_count
     for sink in route.SINKS:
-        assert summed[sink] == wh.read(f"sink_{sink}").count(), sink
+        assert summed[f"sink_{sink}"] == wh.read(f"sink_{sink}").count(), sink
 
 
 def test_commit_ordering_and_catalog_reopen(spark, transcripts, tmp_path, monkeypatch):
@@ -169,7 +169,7 @@ def test_compact_preserves_data(spark, transcripts, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     microbatch.run_microbatch_ingest(spark, transcripts, wh, n_parts=4, parts_per_batch=2)
     before = _sink_state(wh)
-    wh.compact("sink_errors", target_partitions=2)
+    wh.compact("sink_errors")
     assert _sink_state(wh) == before
 
 
@@ -191,7 +191,7 @@ def test_schema_evolution_additive_column(spark, tmp_path):
     )
     got = {(r.conv_id, r.n, r.region) for r in wh.read("t").collect()}
     assert got == {("c1", 1, None), ("c2", 2, "eu")}
-    wh.compact("t", target_partitions=1)
+    wh.compact("t")
     assert {(r.conv_id, r.n, r.region) for r in wh.read("t").collect()} == got
 
 
@@ -231,6 +231,7 @@ def test_time_travel_and_incremental_read(spark, transcripts, tmp_path):
 def test_drop(spark, transcripts, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     microbatch.run_microbatch_ingest(spark, transcripts, wh, n_parts=4, parts_per_batch=4)
+    assert wh.exists("sink_errors")
     wh.drop("sink_errors")
     assert not wh.exists("sink_errors")
 

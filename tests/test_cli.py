@@ -22,7 +22,8 @@ def run(spark, wh_dir, *argv):
 
 def test_create(spark, wh_dir):
     assert run(spark, wh_dir, "create", demo.FIXTURE_YAML) == 0
-    assert glob.glob(f"{wh_dir}/hdfs-logs.config.yaml")
+    with open(demo.FIXTURE_YAML) as f:
+        assert Warehouse(spark, wh_dir).index_config("hdfs-logs") == f.read()
 
 
 def test_index(spark, wh_dir, capsys):
@@ -87,7 +88,7 @@ def test_search_default_limit_is_one(spark, wh_dir, capsys):
 
 
 def test_merge(spark, wh_dir, capsys):
-    assert run(spark, wh_dir, "merge", "hdfs-logs", "--target-partitions", "2") == 0
+    assert run(spark, wh_dir, "merge", "hdfs-logs") == 0
     # data survives compaction
     assert run(spark, wh_dir, "search", "hdfs-logs", "INFO", "--limit", "3") == 0
     out = capsys.readouterr().out
@@ -127,9 +128,64 @@ def test_index_after_merge_keeps_every_batch(spark, tmp_path, capsys):
 
     before = snapshots()
     assert [len(r) for r in before] == [13, 26, 13, 13]
-    assert run(spark, wh_dir, "merge", "hdfs-logs", "--target-partitions", "2") == 0
+    assert run(spark, wh_dir, "merge", "hdfs-logs") == 0
     assert snapshots() == before
     assert run(spark, wh_dir, "index", "hdfs-logs", demo.FIXTURE_JSONL) == 0
     assert wh.read("hdfs-logs").count() == 39
     assert snapshots() == before
     capsys.readouterr()
+
+
+def test_drop_forgets_its_commits(spark, tmp_path, capsys):
+    """create, index, index, drop, create, index: the drop takes the
+    index's catalog rows with it, so only the last commit is known and a
+    snapshot read of a dropped commit is an unknown commit."""
+    wh_dir = str(tmp_path)
+    wh = Warehouse(spark, wh_dir)
+    assert run(spark, wh_dir, "create", demo.FIXTURE_YAML) == 0
+    for _ in range(2):
+        assert run(spark, wh_dir, "index", "hdfs-logs", demo.FIXTURE_JSONL) == 0
+    dropped = wh.commit_order()
+    assert len(dropped) == 2 and wh.exists("hdfs-logs")
+    assert run(spark, wh_dir, "drop", "hdfs-logs") == 0
+    assert wh.commit_order() == [] and not wh.exists("hdfs-logs")
+    with pytest.raises(SystemExit, match="does not exist"):
+        run(spark, wh_dir, "index", "hdfs-logs", demo.FIXTURE_JSONL)
+    assert run(spark, wh_dir, "create", demo.FIXTURE_YAML) == 0
+    assert run(spark, wh_dir, "index", "hdfs-logs", demo.FIXTURE_JSONL) == 0
+    (last,) = wh.commit_order()
+    assert last not in dropped
+    assert [(r.batch_id, r.sink, r.row_count) for r in wh.lineage().collect()] == [
+        (last, "hdfs-logs", 13)
+    ]
+    for batch_id in dropped:
+        with pytest.raises(ValueError, match="unknown commit"):
+            wh.read_as_of("hdfs-logs", batch_id)
+    assert wh.read_as_of("hdfs-logs", last).count() == 13
+    capsys.readouterr()
+
+
+def test_config_lives_in_catalog(spark, tmp_path, capsys):
+    """No index config is written beside the data: a fresh Warehouse on
+    the same root (cli.main opens one per command) finds it in
+    _catalog.sqlite and serves search."""
+    wh_dir = str(tmp_path)
+    assert run(spark, wh_dir, "create", demo.FIXTURE_YAML) == 0
+    assert run(spark, wh_dir, "index", "hdfs-logs", demo.FIXTURE_JSONL) == 0
+    assert not glob.glob(f"{wh_dir}/**/*.config.yaml", recursive=True)
+    capsys.readouterr()
+    assert run(spark, wh_dir, "search", "hdfs-logs", "INFO", "--limit", "3") == 0
+    assert capsys.readouterr().out.count('"tenant_id"') == 3
+
+
+def test_search_after_all_corrupt_index(spark, tmp_path, capsys):
+    """An index run whose every line is quarantined commits no rows, so
+    the catalog holds no rows of the index and search says so."""
+    wh_dir = str(tmp_path / "wh")
+    bad = tmp_path / "bad.jsonl"
+    bad.write_text("not json\n[1, 2]\n")
+    assert run(spark, wh_dir, "create", demo.FIXTURE_YAML) == 0
+    assert run(spark, wh_dir, "index", "hdfs-logs", str(bad)) == 0
+    assert "indexed 0 docs" in capsys.readouterr().out
+    assert run(spark, wh_dir, "search", "hdfs-logs", "INFO") == 1
+    assert "no documents indexed" in capsys.readouterr().err

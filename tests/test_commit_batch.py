@@ -21,8 +21,8 @@ from go_distributed_log_search_spark.transcripts import transcripts_df
 
 from .conftest import SF0001
 
-# lineage key -> warehouse table
-TABLES = {**{s: f"sink_{s}" for s in route.SINKS}, "agg_terms": "agg_terms"}
+# every table a commit writes, as its lineage rows name it
+TABLES = [*(f"sink_{s}" for s in route.SINKS), "agg_terms"]
 
 
 @pytest.fixture(scope="module")
@@ -77,9 +77,9 @@ def test_lineage_counts_are_partition_rows(warehouses):
     for name, wh, _ in warehouses:
         recorded = {(r.batch_id, r.sink): r.row_count for r in wh.lineage().collect()}
         on_disk = {}
-        for key, table in TABLES.items():
+        for table in TABLES:
             for r in wh.read(table).groupBy("batch_id").count().collect():
-                on_disk[(r.batch_id, key)] = r["count"]
+                on_disk[(r.batch_id, table)] = r["count"]
         # a table a batch left empty has no partition: its lineage says 0
         assert set(on_disk) <= set(recorded), name
         assert recorded == {k: on_disk.get(k, 0) for k in recorded}, name
@@ -92,7 +92,7 @@ def test_tables_do_not_inherit_source_stats(spark, warehouses):
     table must read back without it (its hot set is not the source's)."""
     assert aggregate.hot_keys_stat(transcripts_df(spark, SF0001), "conv_id")
     for name, wh, _ in warehouses:
-        for table in TABLES.values():
+        for table in TABLES:
             assert wh.read(table).schema["conv_id"].metadata == {}, (name, table)
 
 

@@ -118,4 +118,5 @@ def test_submit_two_levels_match_oracle(tmp_path, duck):
     assert n_agg > 0
     with contextlib.closing(sqlite3.connect(f"{sink_dir}/_catalog.sqlite")) as con:
         lineage = dict(con.execute("SELECT sink, row_count FROM lineage").fetchall())
-    assert lineage == {**rec_n["sink_counts"], "agg_terms": n_agg}
+    sink_tables = {f"sink_{s}": n for s, n in rec_n["sink_counts"].items()}
+    assert lineage == {**sink_tables, "agg_terms": n_agg}
