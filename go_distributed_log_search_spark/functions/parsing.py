@@ -1,4 +1,4 @@
-"""Typed field-parse expressions — reference parity for P2-P6.
+"""Typed field-parse expressions — reference parity for P2-P5.
 
 Reference: /root/reference/src/commands/field_parser.go (schema-driven
 per-field ParseFunc closures) and /root/reference/src/config/datetime.go
@@ -17,7 +17,6 @@ Parity details preserved:
   (datetime.go:21-47: seconds if |v| in [72_057_595, 8_589_934_591], else
   millis/micros/nanos by successive *1000 ranges).
 - P5 ip: net.ParseIP + To16 -> canonical textual form, field_parser.go:217-241.
-- P6 array: element-wise parse via ``transform`` HOF, field_parser.go:57-72.
 """
 
 from __future__ import annotations
@@ -109,9 +108,3 @@ def normalize_ip(col) -> Column:
     (field_parser.go:217-241). Vectorized pandas UDF over Arrow batches;
     built lazily because pandas_udf registration needs an active session."""
     return F.pandas_udf(_normalize_ip_impl, "string")(col)
-
-
-def parse_array(col: Column, element_parser) -> Column:
-    """P6: element-wise parse over an array column via the ``transform``
-    higher-order function (field_parser.go:57-72)."""
-    return F.transform(col, element_parser)

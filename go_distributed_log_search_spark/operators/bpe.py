@@ -34,13 +34,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _merge_pair_sql(a: str, b: str, var: str = "s") -> str:
+def _merge_pair_sql(a: str, b: str) -> str:
     """Catalyst fold that greedily merges adjacent (a, b) into a||b
-    within the symbol array named ``var``."""
+    within the symbol array column ``s``."""
     ae, be = a.replace("'", "\\'"), b.replace("'", "\\'")
-    return f"""CASE WHEN size({var}) < 2 THEN {var} ELSE aggregate(
-        slice({var}, 2, size({var}) - 1),
-        slice({var}, 1, 1),
+    return f"""CASE WHEN size(s) < 2 THEN s ELSE aggregate(
+        slice(s, 2, size(s) - 1),
+        slice(s, 1, 1),
         (acc, e) -> CASE
             WHEN element_at(acc, -1) = '{ae}' AND e = '{be}'
             THEN concat(slice(acc, 1, size(acc) - 1),
@@ -141,32 +141,6 @@ def bpe_merges(
         results,
         "iter INT, lhs STRING, rhs STRING, merged STRING, pair_count BIGINT",
     )
-
-
-def bpe_apply(df: DataFrame, merges: list, text_col: str = "text") -> DataFrame:
-    """Apply an ordered list of learned (lhs, rhs) merges to every word
-    of every document — the tokenizer-side encode step. Pure map-side:
-    word -> chars -> fold per merge, no shuffle at all; at scale this is
-    the scan stage of the token-count/packing pipeline.
-
-    Output: original columns + ``bpe_tokens`` (array<string>) with the
-    per-word merged symbols flattened in document order.
-    """
-    from ..functions.tokenize import tokenize
-
-    out = df.withColumn(
-        "_words", tokenize(F.col(text_col), "default")
-    ).withColumn(
-        "_syms",
-        F.expr(
-            "transform(_words, w -> transform(sequence(1, length(w)), "
-            "i -> substring(w, i, 1)))"
-        ),
-    )
-    for lhs, rhs in merges:
-        inner = _merge_pair_sql(lhs, rhs, var="x").replace("\n", " ")
-        out = out.withColumn("_syms", F.expr(f"transform(_syms, x -> ({inner}))"))
-    return out.withColumn("bpe_tokens", F.flatten("_syms")).drop("_words", "_syms")
 
 
 def bpe_fertility(

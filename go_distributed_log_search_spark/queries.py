@@ -689,8 +689,8 @@ def q_len_percentiles(spark, sf_dir, exact=True):
 
 
 def q_hourly_windows(spark, sf_dir):
-    """Tumbling event-time windows (the batch twin of the watermarked
-    stream in streaming/windowed.py) — window() API vs DuckDB time_bucket."""
+    """Tumbling event-time windows (streaming/windowed.py) — window() API
+    vs DuckDB time_bucket."""
     from .streaming.windowed import windowed_counts_batch
 
     ev = _tbl(spark, sf_dir, "events")

@@ -1,71 +1,17 @@
-"""Event-time windowed aggregation with watermark-based late-data handling.
+"""Event-time window counts over a batch frame.
 
 The reference has no event-time semantics at all (its only streaming state
-is Kafka offsets; ST1 is processing-time tumbling — SURVEY.md §2.9). This
-is the Structured Streaming extension a transcript/telemetry pipeline
-needs at scale: tumbling event-time windows over the ``ts`` column, a
-watermark bounding how long state waits for stragglers, and append-mode
-emission of finalized windows only.
-
-Scale shape: state is (window, key) -> count — sharded by the groupBy key
-shuffle; the watermark bounds state size (windows older than
-``max_event_time - delay`` are finalized and evicted). Without a watermark
-this state grows forever at 10^12 turns.
+is Kafka offsets; ST1 is processing-time tumbling — SURVEY.md §2.9).
+``windowed_counts_batch`` buckets rows by the ``ts`` column into tumbling
+windows, or hopping ones when ``slide`` is shorter than ``window``, and
+counts rows per (window, key). It backs the ``hourly_windows`` and
+``sliding_windows`` queries.
 """
 
 from __future__ import annotations
 
-from typing import Any
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def windowed_counts_stream(
-    spark: SparkSession,
-    input_path: str,
-    checkpoint_dir: str,
-    query_name: str = "windowed",
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    max_files_per_trigger: int | None = 1,
-) -> Any:
-    """Tumbling event-time counts per (window, key) with late-row dropping.
-
-    Append output mode: a window row is emitted exactly once, when the
-    watermark passes its end — rows later than the watermark never touch
-    finalized windows. Returns the finished query; results in
-    ``spark.table(query_name)``.
-    """
-    schema = spark.read.parquet(input_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
-    agg = (
-        stream.select(F.col(ts_col).cast("timestamp").alias("_ts"), F.col(key_col))
-        .withWatermark("_ts", watermark)
-        .groupBy(F.window("_ts", window).alias("win"), key_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            key_col,
-            "n",
-        )
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def windowed_counts_batch(
@@ -75,7 +21,8 @@ def windowed_counts_batch(
     ts_col: str = "ts",
     slide: str | None = None,
 ) -> DataFrame:
-    """The batch twin (no late semantics): same window/key/count shape.
+    """Row counts per (window, key) over ``ts_col``, one row per
+    non-empty window.
 
     ``slide`` < ``window`` makes the windows HOPPING (overlapping): each
     event lands in window/slide windows — Spark's window() expression

@@ -305,13 +305,17 @@ def test_bpe_merges_batched_conflict_defers_to_next_pass(spark):
     ]
 
 
-def test_bpe_apply_greedy_fold(spark):
-    from go_distributed_log_search_spark.operators.bpe import bpe_apply
+def test_merge_pair_sql_greedy_fold(spark):
+    from go_distributed_log_search_spark.operators.bpe import _merge_pair_sql
 
-    df = spark.createDataFrame([(1, "abab aaa")], ["doc_id", "text"])
-    out = bpe_apply(df, [("a", "b"), ("a", "a")]).collect()[0]
+    words = spark.createDataFrame([("abab",), ("aaa",)], ["w"]).withColumn(
+        "s", F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))")
+    )
+    for lhs, rhs in [("a", "b"), ("a", "a")]:
+        words = words.withColumn("s", F.expr(_merge_pair_sql(lhs, rhs)))
+    out = {r["w"]: r["s"] for r in words.collect()}
     # abab -> [ab, ab]; aaa -> (a,b): no-op -> (a,a): greedy [aa, a]
-    assert out["bpe_tokens"] == ["ab", "ab", "aa", "a"]
+    assert out == {"abab": ["ab", "ab"], "aaa": ["aa", "a"]}
 
 
 # ------------------------------------------------------ conv template dedup

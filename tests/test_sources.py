@@ -127,6 +127,25 @@ def test_quarantine_catches_content_closing_the_wrapper(spark):
     assert sorted(r.line for r in rows if r._corrupt) == sorted(flagged)
 
 
+def test_array_field_keeps_typed_elements(spark):
+    """P6 (field_parser.go:57-72): an ``array: true`` field decodes to an
+    array of its declared element type."""
+    schema = load_schema(
+        """
+name: arrays
+schema:
+  fields:
+    - name: xs
+      type: number
+      subtype: i64
+      array: true
+"""
+    )
+    lines = spark.createDataFrame([('{"xs": [1, 2, 3]}',), ('{"xs": []}',)], "value string")
+    rows = jsonl.read_jsonl_indexed(lines, schema).collect()
+    assert sorted(r.xs for r in rows) == [[], [1, 2, 3]]
+
+
 def test_read_stdin(spark, monkeypatch):
     monkeypatch.setattr(
         "sys.stdin",

@@ -1,9 +1,5 @@
-"""Watermark + event-time windows: late rows beyond the watermark are
-dropped from finalized windows; append mode emits a window exactly once."""
+"""Tumbling event-time windows over a batch frame count every row."""
 
-import time
-
-import pytest
 from pyspark.sql import functions as F
 
 from go_distributed_log_search_spark.streaming import windowed
@@ -14,45 +10,6 @@ def _write(spark, path, rows):
         "event_type", F.col("ts_s").cast("timestamp").alias("ts")
     )
     df.coalesce(1).write.mode("append").parquet(path)
-
-
-def test_late_rows_dropped_and_windows_finalized(spark, tmp_path):
-    src = str(tmp_path / "events")
-    # batch 0: two clicks in [10:00,10:10); a 10:59 view pushes the
-    # watermark to 10:54 after this trigger
-    _write(spark, src, [
-        ("click", "2024-01-01 10:00:30"),
-        ("click", "2024-01-01 10:05:00"),
-        ("view", "2024-01-01 10:59:00"),
-    ])
-    time.sleep(1.1)  # file source orders by mod time; keep batches distinct
-    # batch 1 (watermark 10:54): the [10:00,10:10) window finalizes and is
-    # emitted at this batch's end with n=2
-    _write(spark, src, [("view", "2024-01-01 11:00:00")])
-    time.sleep(1.1)
-    # batch 2 (watermark 10:55): a LATE click at 10:02 — its window was
-    # finalized, the row is dropped by the watermark, NOT re-opened
-    _write(spark, src, [("click", "2024-01-01 10:02:00")])
-    q = windowed.windowed_counts_stream(
-        spark, src, str(tmp_path / "ckpt"), query_name="win_test",
-        window="10 minutes", watermark="5 minutes",
-    )
-    rows = {
-        (str(r.win_start), r.event_type): r.n
-        for r in spark.table("win_test").collect()
-    }
-    # finalized with the 2 on-time clicks only
-    assert rows.get(("2024-01-01 10:00:00", "click")) == 2
-    # the engine counted exactly one watermark-dropped row
-    dropped = sum(
-        (p.get("stateOperators") or [{}])[0].get("numRowsDroppedByWatermark", 0)
-        for p in q.recentProgress
-    )
-    assert dropped == 1
-    # windows not yet passed by the final watermark (10:55) are unemitted
-    assert ("2024-01-01 10:50:00", "view") not in rows
-    assert ("2024-01-01 11:00:00", "view") not in rows
-    assert len(rows) == 1
 
 
 def test_batch_twin_counts_everything(spark, tmp_path):
