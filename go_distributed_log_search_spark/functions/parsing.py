@@ -88,18 +88,23 @@ def parse_datetime(col: Column, formats: tuple[str, ...] = DEFAULT_DATETIME_FORM
     return F.coalesce(*parsed) if len(parsed) > 1 else parsed[0]
 
 
-def _normalize_ip_impl(s: pd.Series) -> pd.Series:
+def _canonical_ip(v):
     import ipaddress
 
-    def norm(v):
-        if v is None:
-            return None
-        try:
-            return str(ipaddress.ip_address(v.strip()))
-        except ValueError:
-            return None
+    if v is None:
+        return None
+    try:
+        return str(ipaddress.ip_address(v.strip()))
+    except ValueError:
+        return None
 
-    return s.map(norm)
+
+def _normalize_ip_impl(s: pd.Series) -> pd.Series:
+    return s.map(_canonical_ip)
+
+
+def _normalize_ip_array_impl(s: pd.Series) -> pd.Series:
+    return s.map(lambda a: None if a is None else [_canonical_ip(v) for v in a])
 
 
 def normalize_ip(col) -> Column:
@@ -108,3 +113,9 @@ def normalize_ip(col) -> Column:
     (field_parser.go:217-241). Vectorized pandas UDF over Arrow batches;
     built lazily because pandas_udf registration needs an active session."""
     return F.pandas_udf(_normalize_ip_impl, "string")(col)
+
+
+def normalize_ip_array(col) -> Column:
+    """``normalize_ip`` on each element of an array<string> column (a
+    Python UDF cannot run inside a higher-order function's lambda)."""
+    return F.pandas_udf(_normalize_ip_array_impl, "array<string>")(col)

@@ -4,24 +4,20 @@ Reference: /root/reference/src/config/mod.go:53-58 declares tokenizer
 ``default | raw | en_stem | whitespace`` per text field; Bluge applies them
 at index time (src/commands/index.go:174). Here a tokenizer is a Column ->
 ArrayType(String) expression used by the posting-count aggregation
-(operators/aggregate.py) and text stats. All JVM-side except en_stem's
-Arrow-batched stemming pass.
+(operators/aggregate.py) and text stats, all JVM-side. CLI index fields
+are never tokenized (search is substring-based), so ``en_stem`` has no
+engine counterpart; the YAML ``tokenizer:`` key is parsed and kept only.
 
 - default:    lowercase, split on non-alphanumeric runs, drop empties
               (Lucene/Bluge standard-analyzer analog).
 - whitespace: split on whitespace runs, case preserved.
 - raw:        whole trimmed value is a single term (keyword field).
-- en_stem:    default + the Porter2 (snowball english) stemmer — the
-              algorithm Bluge itself applies (functions/stemmer.py).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from .stemmer import porter2_stem
 
 # Token = maximal alnum run of the lowercased text. Equivalent to
 # split-on-[^a-z0-9]+ then dropping empties (the DuckDB oracle's form), but
@@ -50,31 +46,10 @@ def tokenize_raw(col: Column) -> Column:
     return F.array(F.trim(col))
 
 
-def _stem_tokens_impl(s: pd.Series) -> pd.Series:
-    return s.map(
-        lambda toks: None if toks is None else [porter2_stem(t) for t in toks]
-    )
-
-
-def _stem_tokens_udf():
-    """array<string> -> array<string>, Porter2 stem per token
-    (functions/stemmer.py), Arrow-batched. Built lazily: pandas_udf
-    registration needs an active session."""
-    return F.pandas_udf(_stem_tokens_impl, "array<string>")
-
-
-def tokenize_en_stem(col: Column) -> Column:
-    """default tokenization + the Porter2 (snowball english) stemmer —
-    the same algorithm Bluge applies for ``en_stem`` (closes the
-    round-2/3 classic-Porter delta; see functions/stemmer.py)."""
-    return _stem_tokens_udf()(tokenize_default(col))
-
-
 TOKENIZERS = {
     "default": tokenize_default,
     "whitespace": tokenize_whitespace,
     "raw": tokenize_raw,
-    "en_stem": tokenize_en_stem,
 }
 
 

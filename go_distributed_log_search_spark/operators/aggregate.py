@@ -113,12 +113,13 @@ def term_counts(
     group_cols: tuple[str, ...] = ("sink", "conv_id"),
     text_col: str = "text",
     tokenizer: str = "default",
-    skew_col: str = "conv_id",
     hot_keys: str | Iterable | None = "auto",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """(group..., term) -> cnt posting counts, skew-split into a
-    pre-partitioned cold branch and a salted two-stage hot branch.
+    """(group..., term) -> cnt posting counts. Grouped by ``conv_id`` (the
+    Zipf-skewed key), they are skew-split into a pre-partitioned cold
+    branch and a salted two-stage hot branch; without it, they are one
+    plain hash aggregate, where partial aggregation does the heavy lifting.
 
     ``num_partitions`` sizes the cold-branch exchange; it bounds per-task
     aggregation-state (distinct groups per task ~ total_groups /
@@ -136,7 +137,7 @@ def term_counts(
     the map stage's FastHashMap/BytesToBytesMap dominated task CPU).
 
     Shape (cold keys — everything but detected heavy hitters):
-        repartition(skew_col) of the COMPACT pre-explode rows (shuffle
+        repartition(conv_id) of the COMPACT pre-explode rows (shuffle
         payload = the text column once, not 40x exploded tokens), then
         explode + aggregate. HashPartitioning(conv_id) satisfies the
         ClusteredDistribution of (group..., term), so Catalyst fuses
@@ -156,26 +157,23 @@ def term_counts(
     the scan. Results are identical across modes (pinned by tests).
 
     ``hot_keys="auto"`` takes the hot set from the ``hot_keys`` metadata of
-    ``skew_col`` (``hot_keys_stat``; frames derived from
+    ``conv_id`` (``hot_keys_stat``; frames derived from
     ``transcripts_df`` / ``transcripts_scaled_df`` carry it) and runs
     ``detect_hot_keys``' one count job only for a frame without it. A
     stale or wrong list costs balance, never correctness: the output does
     not depend on the hot set.
     """
-    if hot_keys == "auto" and skew_col in df.columns:
-        hot_keys = hot_keys_stat(df, skew_col)
-        if hot_keys is None:
-            hot_keys = detect_hot_keys(df, skew_col)
-    elif hot_keys == "auto":
-        hot_keys = None
-    hot = list(hot_keys or [])
-
-    if skew_col not in df.columns:
-        # low-cardinality grouping (no per-conversation key): plain hash
-        # agg; partial aggregation does the heavy lifting.
+    skew_col = "conv_id"
+    if skew_col not in group_cols:
         return _terms(df, group_cols, text_col, tokenizer).groupBy(
             *group_cols, "term"
         ).agg(F.count(F.lit(1)).alias("cnt"))
+
+    if hot_keys == "auto":
+        hot_keys = hot_keys_stat(df, skew_col)
+        if hot_keys is None:
+            hot_keys = detect_hot_keys(df, skew_col)
+    hot = list(hot_keys or [])
 
     # null-safe complement: a NULL skew key must land in the cold branch,
     # not be dropped by three-valued logic
@@ -197,14 +195,9 @@ def term_counts(
         F.count(F.lit(1)).alias("_partial")
     )
     hot_agg = stage1.groupBy(*group_cols, "term").agg(F.sum("_partial").alias("cnt"))
-    merged = cold_agg.unionByName(hot_agg)
-    if skew_col not in group_cols:
-        # the branch split keyed on skew_col, so when it is NOT a group
-        # key the cold and hot branches can each emit a row for the same
-        # (group..., term) — re-aggregate the (result-sized) union
-        # (ADVICE r02: unionByName alone returned duplicate group keys).
-        merged = merged.groupBy(*group_cols, "term").agg(F.sum("cnt").alias("cnt"))
-    return merged
+    # conv_id is a group key, so each (group..., term) row comes from
+    # exactly one branch and the union needs no re-aggregation
+    return cold_agg.unionByName(hot_agg)
 
 
 def ordering_check(df: DataFrame) -> DataFrame:

@@ -29,11 +29,9 @@ def as_of_join(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    how: str = "left",
 ) -> DataFrame:
-    """left columns + the as-of matched ``value_cols`` from right.
-
-    ``how='left'``: unmatched left rows keep nulls; ``'inner'`` drops them.
+    """left columns + the as-of matched ``value_cols`` from right; unmatched
+    left rows keep nulls (a left join).
     """
     # Deterministic tie rule: several right rows can share (key, ts) —
     # e.g. one customer, two orders on the same (day-granular) date. The
@@ -83,16 +81,10 @@ def as_of_join(
         "_left",
         F.last("_r", ignorenulls=True).over(w).alias("_r"),
     ).filter(F.col("_side") == 1)
-    out = carried.select(
+    return carried.select(
         *[F.col(f"_left.{c}").alias(c) for c in left.columns],
         *[F.col(f"_r.{c}").alias(c) for c in value_cols],
     )
-    if how == "inner":
-        out = carried.filter(F.col("_r").isNotNull()).select(
-            *[F.col(f"_left.{c}").alias(c) for c in left.columns],
-            *[F.col(f"_r.{c}").alias(c) for c in value_cols],
-        )
-    return out
 
 
 def range_join(

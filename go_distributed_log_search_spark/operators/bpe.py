@@ -53,40 +53,19 @@ def bpe_merges(
     df: DataFrame,
     text_col: str = "text",
     iters: int = 2,
-    batch_m: int = 1,
 ) -> DataFrame:
     """Learn ``iters`` BPE merges over the corpus and return the merge
     table: (iter, lhs, rhs, merged, pair_count), one row per learned
     merge, iter asc. pair_count is the corpus-wide weighted frequency of
     the chosen pair at the time it was chosen.
 
-    Driver-loop shape: with the default ``batch_m=1`` this is EXACT
-    greedy BPE — one top-1 Spark job per merge, so a real 32k-merge
-    vocabulary means 32k scheduler round-trips. That is inherent to
-    exact distributed BPE (each merge invalidates pair counts touching
-    its symbols); no production trainer pays it. The production shape is
-    ``batch_m > 1``: each pass collects the top-m pairs in ONE job and
-    applies the non-conflicting prefix, making the driver loop
-    O(iters / batch_m) jobs.
-
-    Conflict re-check rule (what makes the batch sound): a candidate is
-    deferred to the next pass if its lhs or rhs appears in the
-    {lhs, rhs, merged} symbol set of any pair already applied this pass.
-    Merging (a, b) only destroys adjacencies touching a or b and only
-    creates adjacencies touching the new token a||b — so the counted
-    frequency of every symbol-disjoint candidate is still EXACT after
-    the merge, and applying the surviving prefix in rank order equals
-    applying each merge independently. The residual (documented)
-    approximation vs batch_m=1 is selection-only: pairs newly created
-    by this pass's merges (x, a||b) are not candidates until the next
-    pass, which is the trade-off every parallel/batched BPE trainer
-    (SentencePiece sampled training, HF tokenizers) accepts. The
-    registered query and the DuckDB oracle both pin batch_m=1.
+    Loop shape: EXACT greedy BPE — one top-1 Spark job per merge,
+    so a 32k-merge vocabulary means 32k scheduler round-trips. That is
+    inherent to exact distributed BPE (each merge invalidates pair counts
+    touching its symbols).
     """
     from ..functions.tokenize import tokenize
 
-    if batch_m < 1:
-        raise ValueError("batch_m must be >= 1")
     spark = df.sparkSession
     words = (
         df.select(F.explode(tokenize(F.col(text_col), "default")).alias("w"))
@@ -115,23 +94,12 @@ def bpe_merges(
                 .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
                 .agg(F.sum("cnt").alias("pc"))
             )
-            m = min(batch_m, iters - len(results))
-            best = pairs.orderBy(F.col("pc").desc(), "a", "b").limit(m).collect()
+            best = pairs.orderBy(F.col("pc").desc(), "a", "b").limit(1).collect()
             if not best:
                 break
-            touched: set[str] = set()
-            applied = []
-            for r in best:
-                a, b = r["a"], r["b"]
-                if a in touched or b in touched:
-                    continue  # counts stale after an earlier merge this pass
-                touched.update((a, b, a + b))
-                applied.append((a, b, r["pc"]))
-            nxt = cur
-            for a, b, pc in applied:
-                results.append((len(results) + 1, a, b, a + b, pc))
-                nxt = nxt.withColumn("s", F.expr(_merge_pair_sql(a, b)))
-            nxt = nxt.persist()
+            a, b, pc = best[0]
+            results.append((len(results) + 1, a, b, a + b, pc))
+            nxt = cur.withColumn("s", F.expr(_merge_pair_sql(a, b))).persist()
             nxt.count()  # materialize before dropping the parent cache
             cur.unpersist()
             cur = nxt

@@ -13,12 +13,15 @@ Extensions beyond the reference (first-class per the build brief):
                       ops: the signature is built with groupBy(min(hash))
                       per permutation band, candidates via self-join on
                       (band, bucket) — the standard LSH-on-Spark shape.
-- simhash_dedup:      64-bit simhash via bit-bucket majority vote, computed
+- simhash_dedup:      60-bit simhash via bit-bucket majority vote, computed
                       with explode + groupBy (JVM-side); near-dups = pairs
-                      sharing a 16-bit block with hamming distance <= k.
+                      sharing a 15-bit block with hamming distance <= k.
 
-Determinism: all hashing uses Spark's xxhash64 with fixed seeds — results
-are stable across runs/cluster sizes.
+Determinism: MinHash and SimHash hash with ``md5_60`` (the top 60 bits of
+an md5 hex digest, parsed base-16), which DuckDB expresses identically, so
+both operators are oracle-checkable end to end; the other operators hash
+with Spark's xxhash64 under fixed seeds. Results are stable across
+runs/cluster sizes.
 """
 
 from __future__ import annotations
@@ -82,28 +85,20 @@ def jaccard_adjacent(
     )
 
 
-def _shingle_hash(p: int, hash_impl: str):
-    """Permutation p's 'hash' of the exploded ``shingle`` column.
-
-    - ``xxhash64``: xxhash64(shingle, seed=p) — one JVM hash, the scale
-      path.
-    - ``md5_60``: top 60 bits of md5("p:shingle")'s hex form, parsed
-      base-16 — slower (one md5 per shingle per permutation) but
-      expressible IDENTICALLY in DuckDB SQL
-      (``('0x' || substr(md5(p || ':' || shingle), 1, 15))::BIGINT``),
-      which makes the whole MinHash-LSH operator oracle-checkable.
+def _shingle_hash(p: int):
+    """Permutation p's 'hash' of the exploded ``shingle`` column: the top
+    60 bits of md5("p:shingle")'s hex form, parsed base-16. One md5 per
+    shingle per permutation, expressible IDENTICALLY in DuckDB SQL
+    (``('0x' || substr(md5(p || ':' || shingle), 1, 15))::BIGINT``), which
+    makes the whole MinHash-LSH operator oracle-checkable.
     """
-    if hash_impl == "xxhash64":
-        return F.xxhash64("shingle", F.lit(p))
-    if hash_impl == "md5_60":
-        return F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(p), F.col("shingle")).cast("binary")), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-    raise ValueError(f"unknown hash_impl {hash_impl}")
+    return F.conv(
+        F.substring(
+            F.md5(F.concat_ws(":", F.lit(p), F.col("shingle")).cast("binary")), 1, 15
+        ),
+        16,
+        10,
+    ).cast("long")
 
 
 def _minhash_signatures(
@@ -112,7 +107,6 @@ def _minhash_signatures(
     text_col: str,
     n_hashes: int,
     shingle_n: int,
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """(id, mh0..mh{n-1}) — one row per doc, one column per permutation.
 
@@ -122,15 +116,15 @@ def _minhash_signatures(
     shingles x n_hashes rows instead — a 32x shuffle-input blowup that made
     this the slowest query on the driver's correctness budget: 192 s of a
     302 s suite at sf0.01. This shape runs in ~2 s.) Permutation p's hash =
-    xxhash64(shingle, seed=p); docs with no shingles (< shingle_n tokens)
-    drop out, same as before.
+    ``_shingle_hash(p)``; docs with no shingles (< shingle_n tokens) drop
+    out, same as before.
     """
     shingled = df.select(
         F.col(id_col).alias("_id"),
         F.explode(word_ngrams(F.col(text_col), shingle_n)).alias("shingle"),
     )
     mins = [
-        F.min(_shingle_hash(p, hash_impl)).alias(f"mh{p}") for p in range(n_hashes)
+        F.min(_shingle_hash(p)).alias(f"mh{p}") for p in range(n_hashes)
     ]
     return shingled.groupBy("_id").agg(*mins)
 
@@ -143,7 +137,6 @@ def minhash_lsh_dedup(
     bands: int = 8,
     shingle_n: int = 3,
     threshold: float = 0.8,
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, exact-Jaccard verified.
 
@@ -180,18 +173,15 @@ def minhash_lsh_dedup(
     # texts — bounded well below input size.
     reps = reps.persist()
     df = reps
-    sig = _minhash_signatures(df, id_col, text_col, n_hashes, shingle_n, hash_impl)
-    # band b's bucket = hash of its rows_per_band minhash columns; bucket
-    # equality <=> band-signature equality (modulo 64-bit hash collisions,
-    # which the exact-Jaccard verify absorbs). The band explode emits
-    # (id, band, bucket) only — signatures never leave the row. The md5_60
-    # variant buckets on md5("mh_a,mh_b,...") so DuckDB can mirror it with
-    # md5(string_agg(mh, ',' ORDER BY p)).
+    sig = _minhash_signatures(df, id_col, text_col, n_hashes, shingle_n)
+    # band b's bucket = md5("mh_a,mh_b,...") of its rows_per_band minhash
+    # columns, which DuckDB mirrors with md5(string_agg(mh, ',' ORDER BY
+    # p)); bucket equality <=> band-signature equality (modulo hash
+    # collisions, which the exact-Jaccard verify absorbs). The band explode
+    # emits (id, band, bucket) only — signatures never leave the row.
     def _bucket(b: int):
         cols = [F.col(f"mh{p}") for p in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        if hash_impl == "md5_60":
-            return F.md5(F.concat_ws(",", *cols).cast("binary"))
-        return F.xxhash64(*cols).cast("string")
+        return F.md5(F.concat_ws(",", *cols).cast("binary"))
 
     band_structs = [
         F.struct(F.lit(b).alias("band"), _bucket(b).alias("bucket"))
@@ -238,9 +228,8 @@ def simhash_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    hash_impl: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash near-dup pairs (64-bit xxhash64, or 60-bit md5 prefix).
+    """SimHash near-dup pairs over a 60-bit md5 prefix per token.
 
     simhash bit j = majority vote of token-hash bit j. Computed as ONE
     aggregation over the exploded tokens with one bit-sum expression per
@@ -256,21 +245,13 @@ def simhash_dedup(
     bounded-recall semantics an LSH pass gives; an oracle must mirror the
     blocking, which ours does.
 
-    ``hash_impl``:
-    - ``xxhash64`` (default): 64-bit, fastest (one JVM hash per token) —
-      the scale path.
-    - ``md5_60``: the top 60 bits of md5's hex form, parsed base-16.
-      Slower but expressible IDENTICALLY in ANSI-ish SQL
-      (``('0x' || substr(md5(tok),1,15))::BIGINT``) — used by the driver
-      query so the whole operator is DuckDB-oracle-checkable end to end.
+    The token hash is the top 60 bits of md5's hex form, parsed base-16:
+    expressible IDENTICALLY in ANSI-ish SQL
+    (``('0x' || substr(md5(tok),1,15))::BIGINT``), so the whole operator is
+    DuckDB-oracle-checkable end to end.
     """
-    if hash_impl == "xxhash64":
-        nbits, h = 64, F.xxhash64("tok")
-    elif hash_impl == "md5_60":
-        nbits = 60
-        h = F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 15), 16, 10).cast("long")
-    else:
-        raise ValueError(f"unknown hash_impl {hash_impl}")
+    nbits = 60
+    h = F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 15), 16, 10).cast("long")
     block_bits = nbits // 4
     toks = df.select(
         F.col(id_col).alias("_id"), F.explode(tokenize(F.col(text_col), "default")).alias("tok")
@@ -581,8 +562,7 @@ def repeated_ngram_spans(
     explode + one partial-agg'd groupBy. The group key here is the span
     TEXT for oracle parity; the 100 TB path groups by xxhash64(gram)
     (8-byte shuffle rows) and joins example text back for the top-k
-    only — same two-job shape as the md5_60/xxhash64 dedup split
-    elsewhere in this module.
+    only.
     """
     toks_df = df.select(
         F.col(id_col), tokenize(F.col(text_col), "default").alias("_toks")
@@ -702,8 +682,7 @@ def cdc_chunk_dedup(
     collect -> chunk rollup (second shuffle). The boundary hash is an
     md5-prefix for DuckDB oracle parity; the 100 TB path swaps both the
     boundary test and the chunk group key to xxhash64 (8-byte shuffle
-    rows) and joins example text back for the top-k only — the same
-    md5_60/xxhash64 split as minhash_lsh_dedup.
+    rows) and joins example text back for the top-k only.
     """
     toks = df.select(
         F.col(id_col),

@@ -21,9 +21,8 @@ def skew_safe_join(
     dim: DataFrame,
     key: str,
     hot_keys: list,
-    how: str = "inner",
 ) -> DataFrame:
-    """Hot-key-split join for a FACT-SIZED dim (too big to broadcast
+    """Hot-key-split inner join for a FACT-SIZED dim (too big to broadcast
     whole — e.g. per-conversation metadata at 10^12 conversations) joined
     on a Zipf-skewed key: a plain hash join sends every row of a hot key
     to ONE reducer (the 40%-of-corpus conv-hot straggler), while this
@@ -39,21 +38,14 @@ def skew_safe_join(
     exactly one branch; pinned against a plain join by tests and oracle).
     Same hot-list discipline as aggregate.term_counts: split on DETECTED
     heavy hitters only — blanket splitting doubles plan size for nothing.
-    ``how`` must be inner/left (key-partition semantics are per-row).
+    NULL keys fall out of both branches, as they match nothing in an
+    inner join.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"skew_safe_join supports inner/left, got {how!r}")
     if not hot_keys:
-        return fact.join(dim, on=key, how=how)
+        return fact.join(dim, on=key)
     is_hot = F.col(key).isin(*hot_keys)
-    # null-safe complement: NULL keys belong in the cold branch (they
-    # match nothing on inner, survive with nulls on left)
-    fact_hot = fact.filter(F.coalesce(is_hot, F.lit(False)))
-    fact_cold = fact.filter(~F.coalesce(is_hot, F.lit(False)))
-    dim_hot = dim.filter(F.coalesce(is_hot, F.lit(False)))
-    dim_cold = dim.filter(~F.coalesce(is_hot, F.lit(False)))
-    hot = fact_hot.join(F.broadcast(dim_hot), on=key, how=how)
-    cold = fact_cold.join(dim_cold, on=key, how=how)
+    hot = fact.filter(is_hot).join(F.broadcast(dim.filter(is_hot)), on=key)
+    cold = fact.filter(~is_hot).join(dim.filter(~is_hot), on=key)
     return hot.unionByName(cold)
 
 

@@ -3,10 +3,10 @@
 Training-pipeline extension (build brief): image/audio/video ride as opaque
 ``binary`` columns plus a typed metadata struct; decode / feature-extract /
 resize / frame-sample run as Arrow-batched pandas functions via
-``mapInPandas``. The decode kernels themselves are STUBBED (no codec libs in
-this container — ``decode_stub`` raises NotImplementedError unless the
-deterministic fake is requested); the Spark-side plumbing — schema,
-partitioning, UDF signature, batch shape — is real and tested.
+``mapInPandas``. The decode kernel itself is a deterministic stand-in
+(``decode_stub``: byte count and a checksum, no codec libraries); the
+Spark-side plumbing — schema, partitioning, UDF signature, batch shape — is
+real and tested.
 
 Design for 100 TB of media:
 - binary column stays OUT of every shuffle: metadata-only projections are
@@ -63,15 +63,10 @@ def synth_media_df(spark, docs: DataFrame, kind: str = "image") -> DataFrame:
     )
 
 
-def decode_stub(payload: bytes, kind: str, fake: bool = False) -> dict:
-    """The decode kernel seam. Real deployments: PIL / torchaudio / pyav.
-    ``fake=True`` returns a deterministic stand-in so the distributed
-    plumbing is testable without codec libs."""
-    if not fake:
-        raise NotImplementedError(
-            "media decode requires codec libraries not present in this "
-            "container; pass fake=True for the deterministic stand-in"
-        )
+def decode_stub(payload: bytes, kind: str) -> dict:
+    """The decode kernel seam (real deployments: PIL / torchaudio / pyav):
+    a deterministic stand-in, so the distributed plumbing runs without
+    codec libraries."""
     n = len(payload or b"")
     return {"n_bytes": n, "checksum": sum(payload[:64]) % 65536 if payload else 0}
 
@@ -81,7 +76,7 @@ EXTRACT_SCHEMA = (
 )
 
 
-def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction: one Arrow batch in, one out.
 
     Output drops the payload column (blob never crosses the boundary back).
@@ -89,7 +84,7 @@ def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [decode_stub(p, k, fake=fake) for p, k in zip(pdf["payload"], pdf["kind"])]
+            feats = [decode_stub(p, k) for p, k in zip(pdf["payload"], pdf["kind"])]
             out = pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],

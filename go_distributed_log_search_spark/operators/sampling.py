@@ -10,15 +10,11 @@ size, with no RNG state anywhere.
 Scale shapes:
 - stratified_sample: row_number window partitioned by the stratum. The
   stratum cardinality is low (sources, languages), so the window shuffle
-  is skewed by construction — two independent mitigations:
-  (1) Spark >= 3.5 inserts WindowGroupLimit BELOW the exchange (verified
-  in this operator's physical plan): every map task pre-prunes to its
-  local top-quota per stratum before shuffling, so the skewed reducer
-  receives at most quota x map-tasks rows, not the stratum;
-  (2) ``prefilter_factor`` additionally cuts candidates at the scan with
-  a deterministic hash-prefix band (~factor * quota rows per stratum)
-  when even quota x map-tasks is too much. The final quota is exact
-  either way.
+  is skewed by construction. Spark >= 3.5 inserts WindowGroupLimit BELOW
+  the exchange (verified in this operator's physical plan): every map
+  task pre-prunes to its local top-quota per stratum before shuffling,
+  so the skewed reducer receives at most quota x map-tasks rows, not the
+  stratum.
 - split_assign: pure map-side projection (hash mod 100 against cumulative
   percentage bounds) — no shuffle, no state, resumable by construction.
 """
@@ -41,35 +37,12 @@ def stratified_sample(
     stratum_col: str,
     id_col: str,
     quota: int,
-    prefilter_factor: int | None = None,
 ) -> DataFrame:
     """Exactly ``quota`` rows per stratum (fewer if the stratum is
     smaller), chosen by md5(id) order — deterministic across engines and
     cluster sizes.
-
-    ``prefilter_factor``: when set, rows are first cut to the hash prefix
-    band expected to contain ~factor*quota rows per stratum, so the
-    skewed per-stratum window sees a bounded candidate set instead of the
-    full table. Exactness requires the band to hold >= quota rows per
-    stratum; factor trades scan selectivity against that guarantee
-    (callers size it from stratum counts, e.g. factor 20 at uniform
-    hashes makes underflow probability negligible).
     """
     src = df.select(stratum_col, id_col, _order_hash(id_col).alias("_h"))
-    if prefilter_factor:
-        # md5 hex is uniform in [0,16); keep the smallest prefix band
-        # expected to contain factor*quota of the stratum's rows.
-        counts = {
-            r[stratum_col]: r["n"]
-            for r in df.groupBy(stratum_col).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        n_min = max(min(counts.values()), 1)
-        frac = min(1.0, (prefilter_factor * quota) / n_min)
-        # numeric 6-hex-digit prefix (not a lexicographic compare against
-        # the shorter bound string, which would cut far below the band)
-        bound = int(frac * 16**6)
-        prefix = F.conv(F.substring("_h", 1, 6), 16, 10).cast("long")
-        src = src.filter(prefix < F.lit(bound))
     w = Window.partitionBy(stratum_col).orderBy("_h")
     return (
         src.withColumn("_rn", F.row_number().over(w))
@@ -233,11 +206,10 @@ def length_trim(
     LEARNED per source instead of hard-coded.
 
     Exact interpolated percentile (Spark `percentile` == DuckDB
-    `quantile_cont`) for oracle parity; at 10^12 rows swap in
-    approx_percentile (t-digest, map-side combinable) — same call
-    shape, documented trade as len_percentiles. Two aggregates over one
-    shuffle key (source); the cutoff join is a broadcast (one row per
-    source).
+    `quantile_cont`) for oracle parity; at 10^12 rows approx_percentile
+    (t-digest, map-side combinable) would bound the per-group state. Two
+    aggregates over one shuffle key (source); the cutoff join is a
+    broadcast (one row per source).
     """
     toks = df.select(
         source_col,

@@ -16,11 +16,14 @@ standard dashboards a log-search deployment runs ON that structure:
   error within k turns of the same conversation (retry-storm /
   error-propagation audit keyed by error signature).
 
+Percentiles are Spark ``percentile`` — linear interpolation,
+bit-identical to DuckDB ``quantile_cont`` — so every group value rides the
+shuffle to its reducer.
+
 Scale shapes: slo_stats/top_talkers are scan + one bounded-cardinality
-hash aggregate (|ops| and |ips| keys; exact percentile shuffles group
-values — swap `approx_percentile` at 10^12 turns, same contract as
-len_percentiles). latency_stats/error_cascade are one conv_id window
-shuffle each; error_cascade windows over ERROR turns only (minority).
+hash aggregate (|ops| and |ips| keys). latency_stats/error_cascade are one
+conv_id window shuffle each; error_cascade windows over ERROR turns only
+(minority).
 """
 
 from __future__ import annotations
@@ -31,28 +34,10 @@ from pyspark.sql import functions as F
 SRC_IP_RE = r"src: /([0-9.]+):"
 
 
-def pctl(col, p: float, exact: bool = True, accuracy: int = 10000):
-    """Percentile aggregate with an exact/approximate switch.
-
-    ``exact=True`` (the registered/oracle default) is Spark
-    ``percentile`` — linear interpolation, bit-identical to DuckDB
-    ``quantile_cont``, but every group value rides the shuffle to its
-    reducer. ``exact=False`` swaps in ``percentile_approx`` (the
-    KLL/GK-style sketch): map-side partial sketches of bounded size
-    merge at the reducer, so a 10^12-turn group costs O(accuracy)
-    memory instead of O(group). Rank error is bounded by 1/accuracy.
-    """
-    if exact:
-        return F.percentile(col, F.lit(p))
-    return F.percentile_approx(col, F.lit(p), F.lit(accuracy))
-
-
-def slo_stats(parsed: DataFrame, exact: bool = True) -> DataFrame:
+def slo_stats(parsed: DataFrame) -> DataFrame:
     """Per-op duration percentiles over parsed INFO lines.
 
     Output (op asc): (op, n_lines, p50_dur, p95_dur, p99_dur, max_dur).
-    ``exact=False`` swaps sketch percentiles in for the 10^12-row
-    deployment (see :func:`pctl`).
     """
     d = F.col("duration").cast("double")
     return (
@@ -60,9 +45,9 @@ def slo_stats(parsed: DataFrame, exact: bool = True) -> DataFrame:
         .groupBy("op")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.round(pctl(d, 0.5, exact), 4).alias("p50_dur"),
-            F.round(pctl(d, 0.95, exact), 4).alias("p95_dur"),
-            F.round(pctl(d, 0.99, exact), 4).alias("p99_dur"),
+            F.round(F.percentile(d, F.lit(0.5)), 4).alias("p50_dur"),
+            F.round(F.percentile(d, F.lit(0.95)), 4).alias("p95_dur"),
+            F.round(F.percentile(d, F.lit(0.99)), 4).alias("p99_dur"),
             F.max("duration").cast("bigint").alias("max_dur"),
         )
         .orderBy("op")
@@ -322,7 +307,7 @@ def ingest_volume_trend(turns: DataFrame) -> DataFrame:
     )
 
 
-def ttfr_stats(turns: DataFrame, exact: bool = True) -> DataFrame:
+def ttfr_stats(turns: DataFrame) -> DataFrame:
     """Time-to-first-response: seconds from a conversation's FIRST user
     turn to its FIRST assistant turn, summarized corpus-wide — the
     serving-side latency metric (TTFR) every agent deployment tracks,
@@ -353,8 +338,8 @@ def ttfr_stats(turns: DataFrame, exact: bool = True) -> DataFrame:
     return ttfr.agg(
         F.count(F.lit(1)).alias("n_convs"),
         F.round(F.avg("s"), 4).alias("avg_s"),
-        F.round(pctl(F.col("s"), 0.5, exact), 4).alias("p50_s"),
-        F.round(pctl(F.col("s"), 0.95, exact), 4).alias("p95_s"),
+        F.round(F.percentile(F.col("s"), F.lit(0.5)), 4).alias("p50_s"),
+        F.round(F.percentile(F.col("s"), F.lit(0.95)), 4).alias("p95_s"),
         F.round(F.max("s"), 4).alias("max_s"),
     )
 
@@ -484,7 +469,7 @@ def active_convs_hourly(turns: DataFrame) -> DataFrame:
     )
 
 
-def tool_latency_stats(turns: DataFrame, exact: bool = True) -> DataFrame:
+def tool_latency_stats(turns: DataFrame) -> DataFrame:
     """Per-TOOL execution latency: seconds from the preceding turn (the
     call site) to each tool turn (the result), summarized per tool name
     — the per-integration slice that latency_stats' role-transition
@@ -498,8 +483,7 @@ def tool_latency_stats(turns: DataFrame, exact: bool = True) -> DataFrame:
     (conv_id, turn_idx, role-as-tool, ts) — the predecessor may be any
     role, so the window runs pre-filter, but nothing wider than those
     four small columns rides the exchange — then a |tools|-cardinality
-    aggregate (exact percentile shuffles group values; swap
-    approx_percentile at 10^12 turns, same contract as slo_stats).
+    aggregate.
     """
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     t = F.col("ts").cast("double")
@@ -514,7 +498,7 @@ def tool_latency_stats(turns: DataFrame, exact: bool = True) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_calls"),
             F.round(F.avg("lat_s"), 4).alias("avg_s"),
-            F.round(pctl(F.col("lat_s"), 0.95, exact), 4).alias("p95_s"),
+            F.round(F.percentile(F.col("lat_s"), F.lit(0.95)), 4).alias("p95_s"),
             F.round(F.max("lat_s"), 4).alias("max_s"),
         )
         .orderBy("tool")

@@ -198,7 +198,6 @@ def q_terms_raw(spark, sf_dir):
     tagged = route.routed(pipeline.parsed_enriched(spark, sf_dir))
     return aggregate.term_counts(
         tagged, group_cols=("sink",), text_col="level", tokenizer="raw",
-        skew_col=None, hot_keys=None,
     )
 
 
@@ -209,7 +208,6 @@ def q_terms_whitespace(spark, sf_dir):
     return aggregate.term_counts(
         tagged,
         group_cols=("sink",), text_col="text", tokenizer="whitespace",
-        skew_col=None, hot_keys=None,
     )
 
 
@@ -302,24 +300,21 @@ def q_jaccard_adjacent(spark, sf_dir):
 def q_minhash_lsh(spark, sf_dir):
     """MinHash + banded LSH near-dup pairs, oracle-checked END TO END
     (VERDICT r02 "what's missing" #5 — was rows-only): the ``md5_60``
-    hash variant makes every stage — exact-dup collapse, per-permutation
+    hash makes every stage — exact-dup collapse, per-permutation
     60-bit shingle hash, banded bucket hash, candidate join, exact-Jaccard
-    verify — expressible identically in DuckDB SQL. xxhash64 stays the
-    default scale path (pinned against this kernel in
-    test_dedup_similarity)."""
+    verify — expressible identically in DuckDB SQL."""
     return dedup.minhash_lsh_dedup(
-        _docs(spark, sf_dir), id_col="doc_id", text_col="text",
-        threshold=0.8, hash_impl="md5_60",
+        _docs(spark, sf_dir), id_col="doc_id", text_col="text", threshold=0.8,
     )
 
 
 def q_simhash(spark, sf_dir):
     """SimHash blocked near-dup pairs, oracle-checked END TO END: the
-    md5_60 hash variant makes every stage (token hash bits, majority
+    md5_60 hash makes every stage (token hash bits, majority
     vote, 15-bit-block candidates, hamming) expressible identically in
     DuckDB SQL (VERDICT r02 task 6 — was rows-only)."""
     return (
-        dedup.simhash_dedup(_docs(spark, sf_dir), max_hamming=16, hash_impl="md5_60")
+        dedup.simhash_dedup(_docs(spark, sf_dir), max_hamming=16)
         .groupBy("hamming")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
@@ -331,9 +326,7 @@ def q_dedup_clusters(spark, sf_dir):
     the simhash md5_60 pair graph; oracle = DuckDB recursive-CTE
     transitive closure. The step that turns pairwise near-dup hits into
     keep-one-per-cluster training-set decisions."""
-    pairs = dedup.simhash_dedup(
-        _docs(spark, sf_dir), max_hamming=16, hash_impl="md5_60"
-    )
+    pairs = dedup.simhash_dedup(_docs(spark, sf_dir), max_hamming=16)
     return dedup.dedup_clusters(pairs)
 
 
@@ -393,7 +386,7 @@ def q_media_features(spark, sf_dir):
     from .operators import multimodal
 
     media = multimodal.synth_media_df(spark, _docs(spark, sf_dir))
-    feats = multimodal.extract_features(media, fake=True)
+    feats = multimodal.extract_features(media)
     return feats.groupBy("kind").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("n_bytes").alias("total_bytes"),
@@ -668,22 +661,14 @@ def q_train_split(spark, sf_dir):
     )
 
 
-def q_len_percentiles(spark, sf_dir, exact=True):
+def q_len_percentiles(spark, sf_dir):
     """Per-role text-length percentiles (p50/p95; exact = linear
-    interpolation — Spark `percentile` == DuckDB `quantile_cont`).
-
-    Exact percentile shuffles every value to its group's reducer; at
-    10^12 turns pass ``exact=False`` for the sketch percentile
-    (telemetry.pctl: map-side combinable, bounded state) — same call
-    shape, documented trade. The registered/oracle default stays exact
-    because the oracle must match bit-for-bit."""
-    from .operators.telemetry import pctl
-
+    interpolation — Spark `percentile` == DuckDB `quantile_cont`)."""
     t = _t(spark, sf_dir)
     ln = F.length("text")
     return t.groupBy("role").agg(
-        F.round(pctl(ln, 0.5, exact), 4).alias("p50_len"),
-        F.round(pctl(ln, 0.95, exact), 4).alias("p95_len"),
+        F.round(F.percentile(ln, F.lit(0.5)), 4).alias("p50_len"),
+        F.round(F.percentile(ln, F.lit(0.95)), 4).alias("p95_len"),
         F.count(F.lit(1)).alias("n_turns"),
     )
 
@@ -1073,12 +1058,11 @@ def q_dense_rank_ties(spark, sf_dir):
     )
 
 
-def q_conversion_latency(spark, sf_dir, exact=True):
+def q_conversion_latency(spark, sf_dir):
     """Time-to-convert distribution: per user, seconds from signup to
     the FIRST subsequent purchase; exact p50/p95 per signup-week cohort.
     Reuses the funnel's chained-min shape (one user exchange, no joins
-    for the stage timestamps), then a cohort-sized percentile —
-    ``exact=False`` (telemetry.pctl sketch) is the corpus-scale swap."""
+    for the stage timestamps), then a cohort-sized percentile."""
     ev = _tbl(spark, sf_dir, "events").select(
         "user_id", "event_type", F.col("ts").cast("timestamp").alias("ts")
     )
@@ -1106,12 +1090,10 @@ def q_conversion_latency(spark, sf_dir, exact=True):
             ).alias("latency_s"),
         )
     )
-    from .operators.telemetry import pctl
-
     return per_user.groupBy("cohort_week").agg(
         F.count(F.lit(1)).alias("n_converted"),
-        F.round(pctl(F.col("latency_s"), 0.5, exact), 4).alias("p50_s"),
-        F.round(pctl(F.col("latency_s"), 0.95, exact), 4).alias("p95_s"),
+        F.round(F.percentile(F.col("latency_s"), F.lit(0.5)), 4).alias("p50_s"),
+        F.round(F.percentile(F.col("latency_s"), F.lit(0.95)), 4).alias("p95_s"),
     )
 
 

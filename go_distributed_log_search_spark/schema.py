@@ -113,12 +113,6 @@ class IndexSchema:
         walk("", self.fields)
         return out
 
-    def tokenizer_for(self, name: str) -> str:
-        for f in self.fields:
-            if f.name == name and f.type == "text":
-                return f.tokenizer
-        return "raw"  # non-text fields: whole value is one term
-
 
 def _parse_field(name: str, cfg: dict) -> FieldSpec:
     ftype = cfg.get("type", "text")

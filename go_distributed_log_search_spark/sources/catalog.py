@@ -83,15 +83,35 @@ class Warehouse:
         sql = "SELECT 1 FROM lineage WHERE sink = ? AND row_count > 0 LIMIT 1"
         return bool(self._sql(sql, (table,)))
 
-    def read(self, table: str) -> DataFrame:
-        """Schema-evolving read: batches may add fields over time (a field
-        added to the ingest schema later must not vanish from old-batch
-        scans). mergeSchema unions every batch's parquet schema, absent
+    def read(self, table: str, batches: list[str] | None = None) -> DataFrame:
+        """The rows of committed batches only: the ``batch_id=``
+        directories of the batches whose lineage recorded rows for
+        ``table`` (of those, only ``batches`` when given). A batch whose
+        data landed but whose lineage row did not (a crash between the
+        two) stays invisible, so a retry under a fresh batch id does not
+        show its rows twice. ``basePath`` keeps ``batch_id`` a column.
+
+        Schema-evolving: batches may add fields over time (a field added
+        to the ingest schema later must not vanish from old-batch scans).
+        mergeSchema unions every read batch's parquet schema, absent
         columns read as NULL — the additive half of Iceberg schema
         evolution. Footer-merging cost is a sandbox-stand-in artifact: in
         production Iceberg resolves the current schema from table
         metadata, not by listing data files."""
-        return self.spark.read.option("mergeSchema", "true").parquet(self.path(table))
+        committed = [b for (b,) in self._sql(
+            "SELECT batch_id FROM lineage WHERE sink = ? AND row_count > 0"
+            " ORDER BY committed_at, batch_id",
+            (table,),
+        )]
+        keep = [b for b in committed if batches is None or b in batches]
+        base = self.path(table)
+        # batch ids (UUIDs, "transcripts-p0-3", ...) need no path escaping.
+        # No batch selected: the committed batches' schema, no rows.
+        df = (
+            self.spark.read.option("mergeSchema", "true").option("basePath", base)
+            .parquet(*(os.path.join(base, f"batch_id={b}") for b in keep or committed))
+        )
+        return df if keep else df.where(F.lit(False))
 
     def append_batch(self, df: DataFrame, table: str, batch_id: str) -> int:
         """Commit one batch into its own partition (idempotent re-run:
@@ -122,10 +142,9 @@ class Warehouse:
     def read_as_of(self, table: str, batch_id: str) -> DataFrame:
         """Snapshot (time-travel) read: the table as of commit
         ``batch_id`` — every batch committed up to and including it, in
-        lineage order. The filter lands on the batch_id PARTITION column,
-        so the scan prunes to the snapshot's directories and never reads
-        later commits (Iceberg's snapshot read resolved from metadata; the
-        listing here is the parquet stand-in)."""
+        lineage order. Only the snapshot's ``batch_id=`` directories are
+        read, never later commits (Iceberg's snapshot read resolved from
+        metadata; the directory list here is the parquet stand-in)."""
         return self.read_between(table, None, batch_id)
 
     def read_between(self, table: str, after: str | None, until: str) -> DataFrame:
@@ -133,14 +152,14 @@ class Warehouse:
         (``after``, ``until``] — the consume-new-data half of streaming
         backfill. ``after=None`` means from the beginning. A commit the
         lineage does not hold (never made, or dropped) raises ValueError.
-        Same partition pruning as read_as_of."""
+        Only the kept batches' directories are read."""
         order = self.commit_order()
         unknown = {after, until} - {None} - set(order)
         if unknown:
             raise ValueError(f"unknown commit {sorted(unknown)}; committed: {order}")
         lo = 0 if after is None else order.index(after) + 1
         keep = order[lo : order.index(until) + 1]
-        return self.read(table).filter(F.col("batch_id").isin(keep))
+        return self.read(table, keep)
 
     def drop(self, table: str) -> None:
         """U2 drop-index analog (drop.go:15-87): the table's lineage rows

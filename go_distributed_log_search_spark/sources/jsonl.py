@@ -35,13 +35,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _claimed_field_expr(spec, raw_map):
-    """Per-FieldSpec typed value: the struct-parse result where from_json
-    already coerced the JSON-native type, overlaid with the reference's
-    string parsers (field_parser.go:134-241, datetime.go:50-106) applied to
-    the raw string form — so ``{"tenant_id": "61"}``, an epoch/rfc2822
-    timestamp string, or a messy IP parse exactly like the reference
-    instead of landing as NULL (VERDICT r02 "What's missing" #1)."""
+def _parsed_value(spec, struct_val, raw_val):
+    """One typed value of ``spec``'s scalar type: the struct-parse result
+    where from_json already coerced the JSON-native type, overlaid with the
+    reference's string parsers (field_parser.go:134-241, datetime.go:50-106)
+    applied to the raw string form — so ``{"tenant_id": "61"}``, an
+    epoch/rfc2822 timestamp string, or a messy IP parse exactly like the
+    reference instead of landing as NULL (VERDICT r02 "What's missing" #1)."""
     from ..functions.parsing import (
         normalize_ip,
         parse_boolean,
@@ -49,10 +49,6 @@ def _claimed_field_expr(spec, raw_map):
         parse_number,
     )
 
-    struct_val = F.col(f"d.{spec.name}")
-    raw_val = raw_map[spec.name]
-    if spec.array or spec.type in ("static_object", "dynamic_object", "text"):
-        return struct_val
     if spec.type == "number" and spec.parse_string:
         return F.coalesce(struct_val, parse_number(raw_val, spec.subtype))
     if spec.type == "boolean" and spec.parse_string:
@@ -65,6 +61,28 @@ def _claimed_field_expr(spec, raw_map):
     if spec.type == "ip":
         return normalize_ip(F.coalesce(struct_val, raw_val))
     return struct_val
+
+
+def _claimed_field_expr(spec, raw_map):
+    """Per-FieldSpec typed column. An ``array: true`` field applies the
+    element parser to each element of the raw array (field_parser.go:57-72):
+    the raw JSON text parsed as ``array<string>`` holds every element's
+    string form (a JSON number as its literal), paired by position with the
+    struct parse, which is NULL as a whole when any element mistypes."""
+    from ..functions.parsing import normalize_ip_array
+
+    struct_val = F.col(f"d.{spec.name}")
+    raw_val = raw_map[spec.name]
+    if spec.type in ("static_object", "dynamic_object", "text"):
+        return struct_val
+    if not spec.array:
+        return _parsed_value(spec, struct_val, raw_val)
+    if spec.type == "ip":  # an ip array's struct parse is its raw strings
+        return normalize_ip_array(struct_val)
+    return F.transform(
+        F.from_json(raw_val, "array<string>"),
+        lambda e, i: _parsed_value(spec, F.get(struct_val, i), e),
+    )
 
 
 def read_jsonl_indexed(

@@ -95,21 +95,15 @@ def run_microbatch_ingest(
     wh: Warehouse,
     n_parts: int = 8,
     parts_per_batch: int = 4,
-    fail_after_batches: int | None = None,
 ) -> list[str]:
     """Drive the full parse->enrich->route->aggregate flow in micro-batches.
 
-    ``fail_after_batches`` simulates a crash for resume tests (raises after
-    N committed batches, BEFORE processing the rest).
     Returns the committed batch_ids.
     """
     tagged_input = with_part_id(transcripts, n_parts)
     todo = pending_partitions(wh, list(range(n_parts)))
     committed: list[str] = []
-    batch_no = 0
     while todo:
-        if fail_after_batches is not None and batch_no >= fail_after_batches:
-            raise RuntimeError("simulated crash before batch %d" % batch_no)
         batch_parts = todo[:parts_per_batch]
         todo = todo[parts_per_batch:]
         # deterministic batch_id so a re-run after crash reuses the same
@@ -135,5 +129,4 @@ def run_microbatch_ingest(
             SOURCE_ID, [(p, marks[str(p)] or 0) for p in batch_parts], batch_id
         )
         committed.append(batch_id)
-        batch_no += 1
     return committed

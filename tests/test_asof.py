@@ -1,5 +1,5 @@
 """As-of join operator: at-or-before matching, ties, unmatched rows,
-inner mode, and no cross-key leakage."""
+and no cross-key leakage."""
 
 from pyspark.sql import functions as F
 
@@ -33,15 +33,6 @@ def test_asof_left_semantics(spark):
     assert out["c"] == (None, None)                    # right row is later
     assert out["d"] == (None, None)                    # key absent on right
     assert len(out) == 4
-
-
-def test_asof_inner_drops_unmatched(spark):
-    left, right = _dfs(spark)
-    out = as_of_join(
-        left, right, on="k", left_ts="ts", right_ts="rts",
-        value_cols=["price"], how="inner",
-    ).collect()
-    assert sorted(r.tag for r in out) == ["a", "b"]
 
 
 def test_range_join_boundaries(spark):

@@ -81,8 +81,8 @@ def test_gap_fill_semantics(spark):
 
 
 def test_skew_safe_join_equals_plain_join(spark):
-    """The hot/cold split must be invisible in results for inner and left
-    joins, including NULL keys (cold branch) and an empty hot list."""
+    """The hot/cold split must be invisible in results, including NULL
+    keys and an empty hot list."""
     from go_distributed_log_search_spark.operators.enrich import skew_safe_join
 
     fact = spark.createDataFrame(
@@ -92,22 +92,17 @@ def test_skew_safe_join_equals_plain_join(spark):
     dim = spark.createDataFrame(
         [("h", "hot"), ("c", "cold"), ("d", "cold2")], "k string, label string"
     )
-    for how in ("inner", "left"):
-        plain = {(r.k, r.v, r.label) for r in fact.join(dim, "k", how).collect()}
-        split = {
-            (r.k, r.v, r.label)
-            for r in skew_safe_join(fact, dim, "k", ["h"], how=how).collect()
-        }
-        assert split == plain, how
-        empty = {
-            (r.k, r.v, r.label)
-            for r in skew_safe_join(fact, dim, "k", [], how=how).collect()
-        }
-        assert empty == plain, how
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        skew_safe_join(fact, dim, "k", ["h"], how="full")
+    plain = {(r.k, r.v, r.label) for r in fact.join(dim, "k").collect()}
+    split = {
+        (r.k, r.v, r.label)
+        for r in skew_safe_join(fact, dim, "k", ["h"]).collect()
+    }
+    assert split == plain
+    empty = {
+        (r.k, r.v, r.label)
+        for r in skew_safe_join(fact, dim, "k", []).collect()
+    }
+    assert empty == plain
 
 
 def test_skew_safe_join_hot_branch_broadcasts(spark):

@@ -30,6 +30,20 @@ def _sink_state(wh):
     return out
 
 
+def _crash_after(mp, n_batches):
+    """Make the micro-batch loop crash after ``n_batches`` commits, before
+    the next batch writes anything."""
+    real, done = microbatch.commit_batch, []
+
+    def commit(*args, **kw):
+        if len(done) >= n_batches:
+            raise RuntimeError(f"simulated crash before batch {len(done)}")
+        done.append(real(*args, **kw))
+        return done[-1]
+
+    mp.setattr(microbatch, "commit_batch", commit)
+
+
 def test_cold_run_commits_everything(spark, transcripts, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "wh"))
     batches = microbatch.run_microbatch_ingest(spark, transcripts, wh, n_parts=8, parts_per_batch=4)
@@ -62,9 +76,12 @@ def test_crash_resume_equals_cold_run(spark, transcripts, tmp_path):
     microbatch.run_microbatch_ingest(spark, transcripts, cold, n_parts=4, parts_per_batch=1)
 
     crashed = Warehouse(spark, str(tmp_path / "crashed"))
-    with pytest.raises(RuntimeError, match="simulated crash"):
+    with pytest.MonkeyPatch.context() as mp, pytest.raises(
+        RuntimeError, match="simulated crash"
+    ):
+        _crash_after(mp, 2)
         microbatch.run_microbatch_ingest(
-            spark, transcripts, crashed, n_parts=4, parts_per_batch=1, fail_after_batches=2
+            spark, transcripts, crashed, n_parts=4, parts_per_batch=1
         )
     # resume: checkpoints skip the two committed batches
     pending_before = microbatch.pending_partitions(crashed, list(range(4)))
@@ -115,10 +132,12 @@ def test_commit_ordering_and_catalog_reopen(spark, transcripts, tmp_path, monkey
     root = str(tmp_path / "wh")
     parts = list(range(8))
 
-    with pytest.raises(RuntimeError, match="simulated crash"):
+    with pytest.MonkeyPatch.context() as mp, pytest.raises(
+        RuntimeError, match="simulated crash"
+    ):
+        _crash_after(mp, 1)
         microbatch.run_microbatch_ingest(
-            spark, transcripts, Warehouse(spark, root),
-            n_parts=8, parts_per_batch=4, fail_after_batches=1,
+            spark, transcripts, Warehouse(spark, root), n_parts=8, parts_per_batch=4
         )
     assert calls == per_batch
     wh = Warehouse(spark, root)
@@ -179,16 +198,18 @@ def test_schema_evolution_additive_column(spark, tmp_path):
     must NOT drop the late column when it rewrites — the additive half of
     Iceberg schema evolution on the parquet stand-in."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.append_batch(
+    n = wh.append_batch(
         spark.createDataFrame([("c1", 1)], "conv_id string, n int"), "t", "b0"
     )
-    wh.append_batch(
+    wh.record_lineage_many("b0", {"t": n})
+    n = wh.append_batch(
         spark.createDataFrame(
             [("c2", 2, "eu")], "conv_id string, n int, region string"
         ),
         "t",
         "b1",
     )
+    wh.record_lineage_many("b1", {"t": n})
     got = {(r.conv_id, r.n, r.region) for r in wh.read("t").collect()}
     assert got == {("c1", 1, None), ("c2", 2, "eu")}
     wh.compact("t")
@@ -197,8 +218,8 @@ def test_schema_evolution_additive_column(spark, tmp_path):
 
 def test_time_travel_and_incremental_read(spark, transcripts, tmp_path):
     """Snapshot read reconstructs the table as of each commit; incremental
-    read returns exactly the rows a commit range appended; both prune on
-    the batch_id partition (no later-commit files scanned)."""
+    read returns exactly the rows a commit range appended; both read only
+    their batches' directories (no later-commit files scanned)."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     committed = microbatch.run_microbatch_ingest(
         spark, transcripts, wh, n_parts=4, parts_per_batch=2
@@ -218,14 +239,24 @@ def test_time_travel_and_incremental_read(spark, transcripts, tmp_path):
     assert wh.read_between("sink_errors", after=b1, until=b1).count() == 0
     assert wh.read_between("sink_errors", None, b1).count() == full.count()
 
-    # the snapshot filter must reach the partition listing, not scan+filter
-    plan = snap0._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [batch_id" in plan.replace("#", " #").replace(
-        "batch_id #", "batch_id#"
-    ) or "batch_id" in plan.split("PartitionFilters")[1][:120], plan
+    # the snapshot scans its own batch directory only
+    files = snap0.inputFiles()
+    assert files and all(f"/batch_id={b0}/" in f for f in files), files
 
     with pytest.raises(ValueError):
         wh.read_as_of("sink_errors", "nonexistent-commit")
+
+
+def test_read_skips_batch_without_lineage(spark, tmp_path):
+    """A batch whose data landed but whose lineage row did not (a crash
+    between the two) is not committed: read and read_as_of agree on the
+    committed batch's rows."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame([("c1", 1), ("c2", 2)], "conv_id string, n int")
+    wh.record_lineage_many("b1", {"t": wh.append_batch(df, "t", "b1")})
+    wh.append_batch(df, "t", "b2")  # no lineage row follows
+    assert sorted(r.batch_id for r in wh.read("t").collect()) == ["b1", "b1"]
+    assert wh.read_as_of("t", "b1").count() == 2
 
 
 def test_drop(spark, transcripts, tmp_path):

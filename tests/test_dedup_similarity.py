@@ -146,17 +146,6 @@ def test_dedup_clusters_summary(spark):
     assert rows == {1: (3, 3), 7: (2, 8)}
 
 
-def test_stratified_sample_prefilter_exact(spark):
-    from go_distributed_log_search_spark.operators import sampling
-
-    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
-    full = sorted(tuple(r) for r in sampling.stratified_sample(
-        docs, "source", "doc_id", 3).collect())
-    pre = sorted(tuple(r) for r in sampling.stratified_sample(
-        docs, "source", "doc_id", 3, prefilter_factor=20).collect())
-    assert full == pre and full
-
-
 def test_incremental_dedup_bloom(spark):
     corpus = spark.createDataFrame(
         [(i, f"corpus document number {i} body") for i in range(50)],

@@ -1,6 +1,6 @@
 """Multimodal plumbing — schema, mapInPandas batch shape, blob pruning.
 
-The decode kernel is a documented stub (no codec libs in this container);
+The decode kernel is a deterministic stand-in (no codec libraries);
 what must be REAL and tested is the Spark-side plumbing: typed metadata
 schema, Arrow-batched feature extraction that never returns the blob, and
 metadata-only plans that prune the payload column out of the parquet scan.
@@ -22,7 +22,7 @@ def media(spark):
 
 def test_extract_features_row_parity_and_values(spark, media):
     docs = spark.read.parquet(f"{SF0001}/documents.parquet")
-    feats = multimodal.extract_features(media, fake=True)
+    feats = multimodal.extract_features(media)
     assert feats.count() == docs.count()
     # n_bytes == utf-8 byte length of the synthesized payload
     joined = (
@@ -33,11 +33,6 @@ def test_extract_features_row_parity_and_values(spark, media):
     assert bad == 0
     # payload never crosses back
     assert "payload" not in feats.columns
-
-
-def test_decode_stub_raises_without_fake():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_stub(b"bytes", "image", fake=False)
 
 
 def test_metadata_projection_prunes_payload(spark, media, tmp_path):

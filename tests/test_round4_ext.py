@@ -272,37 +272,17 @@ def test_bpe_merges_self_pair_then_merged_symbol(spark):
     df = spark.createDataFrame([("aaaaa",), ("aaaaa",), ("aab",)], ["text"])
     got = [tuple(r) for r in bpe_merges(df, iters=2).collect()]
     assert got == [(1, "a", "a", "aa", 9), (2, "aa", "a", "aaa", 2)]
-
-
-def test_bpe_merges_batched_disjoint_pairs_match_exact(spark):
-    from go_distributed_log_search_spark.operators.bpe import bpe_merges
-
-    # top-2 pairs are symbol-disjoint ((a,b) and (c,d)) so one batched
-    # pass must reproduce the exact-greedy merge table: disjoint merges
-    # cannot perturb each other's counted frequency
+    # re-counting after each merge: (a,a) outranks (a,b), and once "aab"
+    # is [aa, b] the second merge is (aa, b), not the stale (a, b)
+    df = spark.createDataFrame([("aab",)] * 3 + [("aa",)], ["text"])
+    got = [tuple(r) for r in bpe_merges(df, iters=2).collect()]
+    assert got == [(1, "a", "a", "aa", 4), (2, "aa", "b", "aab", 3)]
+    # symbol-disjoint top pairs merge in rank order
     df = spark.createDataFrame(
         [("abab",), ("abab",), ("cdcd",), ("cd",), ("ab",)], ["text"]
     )
-    exact = [tuple(r) for r in bpe_merges(df, iters=2, batch_m=1).collect()]
-    batched = [tuple(r) for r in bpe_merges(df, iters=2, batch_m=2).collect()]
-    assert batched == exact == [
-        (1, "a", "b", "ab", 5), (2, "c", "d", "cd", 3)
-    ]
-
-
-def test_bpe_merges_batched_conflict_defers_to_next_pass(spark):
-    from go_distributed_log_search_spark.operators.bpe import bpe_merges
-
-    # top-2 pairs share symbol a: (a,a) then (a,b). The batch applies
-    # only (a,a) — (a,b)'s count is stale once a can be swallowed into
-    # aa — and the next pass re-counts: "aab" is [aa, b] after merge 1,
-    # so the true second merge is (aa, b), not the stale (a, b)
-    df = spark.createDataFrame([("aab",)] * 3 + [("aa",)], ["text"])
-    exact = [tuple(r) for r in bpe_merges(df, iters=2, batch_m=1).collect()]
-    batched = [tuple(r) for r in bpe_merges(df, iters=2, batch_m=2).collect()]
-    assert batched == exact == [
-        (1, "a", "a", "aa", 4), (2, "aa", "b", "aab", 3)
-    ]
+    got = [tuple(r) for r in bpe_merges(df, iters=2).collect()]
+    assert got == [(1, "a", "b", "ab", 5), (2, "c", "d", "cd", 3)]
 
 
 def test_merge_pair_sql_greedy_fold(spark):
@@ -786,28 +766,6 @@ def test_ttfr_stats_semantics(spark):
     out = ttfr_stats(df).collect()[0]
     assert out["n_convs"] == 1
     assert out["avg_s"] == out["p50_s"] == out["max_s"] == 10.0
-
-
-def test_percentile_exact_false_plans_sketch(spark):
-    # the five percentile operators take exact=False for the 10^12-row
-    # deployment: the plan must swap percentile -> percentile_approx
-    # (map-side-combinable sketch) and values must stay close on a
-    # distribution the sketch resolves exactly (n < accuracy)
-    from go_distributed_log_search_spark.operators.telemetry import slo_stats
-
-    rows = [("op_a", float(i), "INFO") for i in range(1, 101)]
-    df = spark.createDataFrame(rows, ["op", "duration", "level"])
-    approx = slo_stats(df, exact=False)
-    plan = approx._jdf.queryExecution().optimizedPlan().toString()
-    assert "percentile_approx" in plan
-    exact_plan = slo_stats(df)._jdf.queryExecution().optimizedPlan().toString()
-    assert "percentile_approx" not in exact_plan
-    out = approx.collect()[0]
-    # n=100 << accuracy=10000 -> the sketch holds every value; the only
-    # deviation from exact is interpolation (sketch returns a data point)
-    assert abs(out["p50_dur"] - 50.5) <= 0.5
-    assert abs(out["p95_dur"] - 95.05) <= 1.0
-    assert out["n_lines"] == 100 and out["max_dur"] == 100
 
 
 def test_turn_position_profile_semantics(spark):

@@ -146,6 +146,32 @@ schema:
     assert sorted(r.xs for r in rows) == [[], [1, 2, 3]]
 
 
+def test_array_field_parses_each_element(spark):
+    """P6 (field_parser.go:57-72): the element parser runs on each element
+    of an array field, as the scalar parser does on a scalar field: a
+    numeric string parses, an unparseable element alone becomes NULL."""
+    schema = load_schema(
+        """
+name: arrays
+schema:
+  fields:
+    - name: xs
+      type: number
+      array: true
+    - name: n
+      type: number
+"""
+    )
+    lines = spark.createDataFrame(
+        [('{"xs": ["1", "2"], "n": "7"}',), ('{"xs": [1, "x"]}',), ('{"xs": [1, 2]}',)],
+        "value string",
+    )
+    rows = [tuple(r) for r in jsonl.read_jsonl_indexed(lines, schema).select("xs", "n").collect()]
+    assert sorted(rows, key=repr) == sorted(
+        [([1.0, 2.0], 7.0), ([1.0, None], None), ([1.0, 2.0], None)], key=repr
+    )
+
+
 def test_read_stdin(spark, monkeypatch):
     monkeypatch.setattr(
         "sys.stdin",

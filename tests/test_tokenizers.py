@@ -1,7 +1,5 @@
-"""Tokenizer modes (config/mod.go:53-58): default / raw / whitespace /
-en_stem. default/raw/whitespace are oracle-backed via the terms_* driver
-queries; en_stem (Porter2 / snowball english — the same algorithm Bluge
-applies) is pinned here and in test_stemmer.py."""
+"""Tokenizer modes (config/mod.go:53-58): default / raw / whitespace,
+oracle-backed via the terms_* entry queries and pinned here."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,14 +30,6 @@ def test_raw_whole_value_single_term(one):
     assert got == ["ERROR Level"]
 
 
-def test_en_stem_fixed_tokens(one):
-    # full Porter: step-1b cleanup gives running -> run (VERDICT r02 #4)
-    got = one(tokenize.tokenize(
-        F.lit("classes entries errors running jumped pass kiss"), "en_stem"
-    ))
-    assert got == ["class", "entri", "error", "run", "jump", "pass", "kiss"]
-
-
 def test_bpe_ish_token_budget(one):
     from go_distributed_log_search_spark.operators import textstats
 
@@ -47,12 +37,6 @@ def test_bpe_ish_token_budget(one):
     assert one(textstats.ws_token_count_expr(text)) == 4
     # don | 't | ' stop' | ',' | ' it' | 's-contraction | ' 42' | km | '!'
     assert one(textstats.bpe_token_count_expr(text)) == 9
-
-
-def test_en_stem_keeps_short_and_vowelless(one):
-    # no vowel before 'ing' -> untouched; bare 'ss' kept
-    got = one(tokenize.tokenize(F.lit("string thing ss"), "en_stem"))
-    assert got == ["string", "thing", "ss"]
 
 
 def test_approx_distinct_close_to_exact(spark):
