@@ -272,17 +272,30 @@ def test_bpe_merges_self_pair_then_merged_symbol(spark):
     df = spark.createDataFrame([("aaaaa",), ("aaaaa",), ("aab",)], ["text"])
     got = [tuple(r) for r in bpe_merges(df, iters=2).collect()]
     assert got == [(1, "a", "a", "aa", 9), (2, "aa", "a", "aaa", 2)]
-    # re-counting after each merge: (a,a) outranks (a,b), and once "aab"
-    # is [aa, b] the second merge is (aa, b), not the stale (a, b)
-    df = spark.createDataFrame([("aab",)] * 3 + [("aa",)], ["text"])
-    got = [tuple(r) for r in bpe_merges(df, iters=2).collect()]
-    assert got == [(1, "a", "a", "aa", 4), (2, "aa", "b", "aab", 3)]
-    # symbol-disjoint top pairs merge in rank order
+
+
+def test_bpe_merges_batched_disjoint_pairs_match_exact(spark):
+    from go_distributed_log_search_spark.operators.bpe import bpe_merges
+
+    # top-2 pairs are symbol-disjoint ((a,b) and (c,d)): one merge per
+    # pass takes them in rank order, and the first merge leaves the
+    # second pair's count untouched
     df = spark.createDataFrame(
         [("abab",), ("abab",), ("cdcd",), ("cd",), ("ab",)], ["text"]
     )
     got = [tuple(r) for r in bpe_merges(df, iters=2).collect()]
     assert got == [(1, "a", "b", "ab", 5), (2, "c", "d", "cd", 3)]
+
+
+def test_bpe_merges_batched_conflict_defers_to_next_pass(spark):
+    from go_distributed_log_search_spark.operators.bpe import bpe_merges
+
+    # top-2 pairs share symbol a: (a,a) then (a,b). (a,a) merges first
+    # and the next pass re-counts: "aab" is [aa, b] after merge 1, so
+    # the second merge is (aa, b), not the stale (a, b)
+    df = spark.createDataFrame([("aab",)] * 3 + [("aa",)], ["text"])
+    got = [tuple(r) for r in bpe_merges(df, iters=2).collect()]
+    assert got == [(1, "a", "a", "aa", 4), (2, "aa", "b", "aab", 3)]
 
 
 def test_merge_pair_sql_greedy_fold(spark):
